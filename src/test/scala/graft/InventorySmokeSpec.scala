@@ -3,16 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Whole-inventory contract + smoke: the driver-facing maps stay
-  * consistent, and every batch query at least executes at sf0.001 (the
-  * oracle VALUE check runs in Verify; this catches runtime breakage in
-  * plain `sbt test`). */
+  * consistent, and every batch query executes at sf0.001 and returns the
+  * result locked in `digests/sf0.001.json` (see [[DigestLock]]; the
+  * oracle VALUE check runs in Verify). */
 class InventorySmokeSpec extends AnyFunSuite with TestSession {
-
-  // streaming/iterative queries cost seconds each — they have their own
-  // suites and Verify coverage; exclude from the per-test smoke sweep
-  private val slow = Set(
-    "q_stream_wordcount", "q_stream_tumbling", "q_stream_dedup",
-    "q_dedup_clusters", "q_join_bucketed")
 
   test("driver contract: oracle map keys ⊆ query map keys; rows-only is the exception") {
     val qs = SparkEntry.queries.keySet
@@ -26,12 +20,15 @@ class InventorySmokeSpec extends AnyFunSuite with TestSession {
     assert(SparkEntry.entry(spark).collect().nonEmpty)
   }
 
-  SparkEntry.queries.keys.toSeq.sorted.filterNot(slow.contains).foreach { name =>
+  DigestLock.gates.foreach { name =>
     test(s"smoke: $name executes at sf0.001 with a non-empty schema") {
       val df = SparkEntry.queries(name)(spark, sfDir)
       assert(df.schema.nonEmpty)
-      try df.collect() // any runtime failure surfaces here
-      finally queries.Scratch.release(spark) // the harness discipline
+      val got =
+        try DigestLock.digest(df) // any runtime failure surfaces here
+        finally queries.Scratch.release(spark) // the harness discipline
+      assert(DigestLock.expected.get(name).contains(got),
+        s"$name: (rows, digest) $got, locked ${DigestLock.expected.get(name)}")
     }
   }
 }
