@@ -24,6 +24,10 @@ import org.apache.spark.sql.functions._
   */
 object SimilarityQueries {
 
+  /** The key of every memo here: (session, source dir), the dir string
+    * as given — a re-spelled dir is a different key. */
+  private[graft] type Key = (SparkSession, String)
+
   /** Exact cosine between two embedding columns given precomputed squared
     * norms: DECIMAL-fold dot (native codegen'd `vector_dot_dec`, an exact
     * sum of per-product DECIMAL(38,12) quantizations — bit-identical to
@@ -61,65 +65,22 @@ object SimilarityQueries {
     * stats-less LogicalRDD demotes non-equi joins to CartesianProduct —
     * and an immediate count() populates the cache before a join's
     * concurrently-submitted stages can each miss and recompute. */
-  // INVARIANT (ADVICE r2): entries are keyed by (session, dir) and never
-  // auto-evict — correct for the single-process bench/verify harness where
-  // each sf dir's parquet is immutable, but a long-lived session that
-  // rewrites a dir's files or touches many dirs should call clearCache().
+  // Keyed by (session, dir) and never auto-evicted — right for the
+  // single-process bench/verify harness where each sf dir's parquet is
+  // immutable; a long-lived session that rewrites a dir's files calls
+  // Memo.clearAll().
   private val vecCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    Memo.withRelease[Key, DataFrame](_.unpersist(blocking = false))
 
   // Memoized int8-quantized corpus for q_sim_quantized: without it the
   // quantization lineage (corpus scan + global-max agg + per-row floor
   // transform) evaluates once per JOIN SIDE per run. localCheckpoint pins
-  // one materialization, like DedupQueries' band table.
-  private val q8Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Drop all memoized corpora. persist-backed entries unpersist
-    * immediately; localCheckpoint-backed entries (q8) release their RDD
-    * blocks via the ContextCleaner once the dropped reference is GC'd —
-    * there is no synchronous free for checkpoint blocks. For long-lived
-    * sessions / changed source data; the bench harness never needs it. */
-  def clearCache(): Unit = {
-    vecCache.values.foreach(df => df.unpersist(blocking = false))
-    vecCache.clear()
-    q8Cache.clear()
-    hnswCache.values.foreach { case (a, b, c) =>
-      Seq(a, b, c).foreach(_.unpersist(blocking = false))
-    }
-    hnswCache.clear()
-    // path memos: clearing makes the next touch rebuild (overwrite) the
-    // on-disk index — required after source-data rewrites
-    bucketCountCache.clear()
-    persistedIvfCache.clear()
-    upsertIvfCache.clear()
-    trainedIvfCache.clear()
-    deletedIvfCache.clear()
-    compactIvfCache.clear()
-    streamUpsertCache.clear()
-    retrainCache.values.foreach { case (_, a, b) =>
-      a.unpersist(blocking = false); b.unpersist(blocking = false)
-    }
-    retrainCache.clear()
-    foldCache.clear()
-    filteredIvfCache.clear()
-    filteredPlannerCache.clear()
-    pqIndexCache.clear()
-    plannerCache.clear()
-    serveMaintTraceCache.clear()
-    streamPqCache.clear()
-    foldPqCache.clear()
-    retrain2Cache.clear()
-    hnswIndexPathCache.clear()
-    hierHnswCache.clear()
-    hnswStreamUpsertCache.clear()
-    hnswDeleteCache.clear()
-    hnswUpsertCache.clear()
-    hnswRepairCache.clear()
-  }
+  // one materialization, like DedupQueries' band table; its blocks are
+  // released by the ContextCleaner once a dropped entry is GC'd.
+  private val q8Cache = Memo[Key, DataFrame]()
 
   private[queries] def vectors(spark: SparkSession, dir: String): DataFrame =
-    vecCache.getOrElseUpdate((spark, dir), {
+    vecCache((spark, dir)) {
       val df = Tables(spark, dir).embeddings
         .select(
         // label rides along (one int per row): q_knn_predict needs it, and
@@ -131,7 +92,7 @@ object SimilarityQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count()
       df
-    })
+    }
 
   /** Nearest-centroid assignment (16 seed cells, exact cosine, ties to
     * the smallest cent_id) for every corpus vector: (vec_id, cent_id).
@@ -179,12 +140,7 @@ object SimilarityQueries {
     // re-quadratizes that at scale; C = ceil(√n) keeps it ~n^1.5
     // (23 cells at 500 vectors, 45 at 2000, derived from the corpus via
     // the broadcast-scalar idiom). The hub mesh grows as C² = n edges.
-    val nn = v.agg(count(lit(1)).as("n"))
-    val c = v.crossJoin(broadcast(nn))
-      .filter(col("vec_id") < ceil(sqrt(col("n"))).cast("long"))
-      .select(
-        col("vec_id").as("cent_id"), col("embedding").as("cemb"),
-        col("norm2").as("cnorm2"))
+    val c = sqrtCentroids(v)
     val byVec = Window.partitionBy(col("vec_id"))
       .orderBy(col("ccos").desc, col("cent_id"))
     // checkpointed: the assignment subtree (broadcast-16 crossJoin +
@@ -234,6 +190,18 @@ object SimilarityQueries {
       .distinct()
       .repartition(col("src"))
     (asg, hub, adj)
+  }
+
+  /** The slice's first ceil(√n) vectors as centroids (cent_id, cemb,
+    * cnorm2) — the seed discipline of every √n-cell layout, with n
+    * derived via the broadcast-scalar idiom (the count never rides the
+    * driver). */
+  private def sqrtCentroids(slice: DataFrame): DataFrame = {
+    val nn = slice.agg(count(lit(1)).as("n"))
+    slice.crossJoin(broadcast(nn))
+      .filter(col("vec_id") < ceil(sqrt(col("n"))).cast("long"))
+      .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"),
+        col("norm2").as("cnorm2"))
   }
 
   /** The unrolled beam-search hop chain of the graph-ANN oracle: 4
@@ -676,13 +644,15 @@ object SimilarityQueries {
     * it. persist (not Scratch.checkpoint) + eager count: the cached
     * frames must SURVIVE gate completion, and the eager materialization
     * decouples them from hnswIndex's gate-scoped checkpoint blocks. */
-  private val hnswCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
+  private val hnswCache =
+      Memo.withRelease[Key, (DataFrame, DataFrame, DataFrame)] {
+    case (q, hub, adj) => Seq(q, hub, adj).foreach(_.unpersist(blocking = false))
+  }
 
   private def hnswPrepared(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val v = vectors(spark, dir)
-    val (q, hub, adj) = hnswCache.getOrElseUpdate((spark, dir), {
+    val (q, hub, adj) = hnswCache((spark, dir)) {
       val (asg, hub0, adj0) = hnswIndex(spark, dir)
       def mat(df: DataFrame): DataFrame = {
         val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -694,7 +664,7 @@ object SimilarityQueries {
           .select(col("vec_id").as("qid"), col("embedding").as("qemb"),
             col("norm2").as("qnorm2"), col("cent_id"))),
         mat(hub0), mat(adj0))
-    })
+    }
     (v, q, hub, adj)
   }
 
@@ -757,48 +727,18 @@ object SimilarityQueries {
   // over the sb/nb buckets (delete = drop the node's payload +
   // adjacency rows in their buckets' partitions).
 
-  private val hnswIndexPathCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val hnswIndexPathCache = Memo[Key, String]()
 
   /** Memoized: build the navigable graph once (hnswIndex) and persist
     * routing + hubs + bucketed adjacency + bucketed node payloads;
     * returns the root. */
   private[graft] def persistedHnswIndex(spark: SparkSession,
       dir: String): String =
-    hnswIndexPathCache.getOrElseUpdate((spark, dir), {
-      import graft.streaming.PartitionedStore
+    hnswIndexPathCache((spark, dir)) {
       val root = indexRoot("hnswindex", dir)
-      PartitionedStore.removeTree(new java.io.File(root))
-      val v = vectors(spark, dir)
-      val (asg, hub, adj) = hnswIndex(spark, dir)
-      val nn = v.agg(count(lit(1)).as("n"))
-      v.crossJoin(broadcast(nn))
-        .filter(col("vec_id") < ceil(sqrt(col("n"))).cast("long"))
-        .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"),
-          col("norm2").as("cnorm2"))
-        .write.mode("overwrite").parquet(s"$root/centroids")
-      resetBuckets(spark, root)
-      hub.write.mode("overwrite").parquet(s"$root/hubs")
-      val buckets = graphBuckets(spark, root)
-      adj.withColumn("sb", pmod(col("src"), lit(buckets)))
-        .repartition(col("sb"))
-        .write.mode("overwrite").partitionBy("sb").parquet(s"$root/adj")
-      // label rides along (one int per row) so the label-filtered serve
-      // reads it from the layout instead of joining the corpus back in;
-      // cent_id too (r16) — it makes this layout's bottom tables
-      // identical to the full-slice hier layout's, so hierHnswIndexes
-      // derives its full root by file copy + layer build instead of
-      // re-running the engine's most expensive build, and the planner's
-      // degraded-degree signal can read this layout like the
-      // maintenance-lineage ones. Unfiltered serves prune both at the
-      // scan.
-      v.select(col("vec_id"), col("label"), col("embedding"), col("norm2"))
-        .join(asg.select("vec_id", "cent_id"), "vec_id")
-        .withColumn("nb", pmod(col("vec_id"), lit(buckets)))
-        .repartition(col("nb"))
-        .write.mode("overwrite").partitionBy("nb").parquet(s"$root/nodes")
+      buildGraphLayout(spark, vectors(spark, dir), root)
       root
-    })
+    }
 
   /** Beam serve over the persisted graph: enter at the hub of each
     * query's routed cell, then 4 hops of expand → score → keep top
@@ -1039,38 +979,42 @@ object SimilarityQueries {
   // cells grow with √n — the q_sim_ivf_cells dial transplanted to the
   // graph tier, gated at two corpus slices.
 
-  private val hierHnswCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
+  private val hierHnswCache = Memo[Key, (String, String)]()
 
-  /** Build one slice's flat graph layout + the two layer tables at
-    * `root`: entryhubs (eh, eemb, enorm2 — S rows, read first) and
-    * hubs2 (the full hub table partitioned by its entry assignment). */
-  private[graft] def buildHierHnswIndex(spark: SparkSession, slice: DataFrame,
+  /** Wipe `root` and write one slice's flat graph layout there: the
+    * √n routing centroids, the hub table, the adjacency bucketed by src
+    * (sb = src mod √n) and the node payloads bucketed by vec_id. Nodes
+    * carry label (the filtered serve reads it from the layout instead of
+    * joining the corpus back in) and cent_id (insert candidates are one
+    * pushed filter, and the graph planner's degraded-degree signal reads
+    * every layout); unfiltered serves prune both at the scan. The
+    * persisted serve layout, the upsert base and every hier slice are
+    * this layout, so one writer keeps their bottom tables identical. */
+  private def buildGraphLayout(spark: SparkSession, slice: DataFrame,
       root: String): Unit = {
-    import graft.streaming.PartitionedStore
-    PartitionedStore.removeTree(new java.io.File(root))
+    graft.streaming.PartitionedStore.removeTree(new java.io.File(root))
     val (asg, hub, adj) = hnswIndexFrames(slice)
-    val nn = slice.agg(count(lit(1)).as("n"))
-    slice.crossJoin(broadcast(nn))
-      .filter(col("vec_id") < ceil(sqrt(col("n"))).cast("long"))
-      .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"),
-        col("norm2").as("cnorm2"))
-      .write.mode("overwrite").parquet(s"$root/centroids")
+    sqrtCentroids(slice).write.mode("overwrite").parquet(s"$root/centroids")
     resetBuckets(spark, root)
     hub.write.mode("overwrite").parquet(s"$root/hubs")
     val buckets = graphBuckets(spark, root)
     adj.withColumn("sb", pmod(col("src"), lit(buckets)))
       .repartition(col("sb"))
       .write.mode("overwrite").partitionBy("sb").parquet(s"$root/adj")
-    // nodes carry cent_id like the maintenance-lineage layouts (so the
-    // graph planner's degraded-degree signal reads this layout too) and
-    // label for the filtered serve; unfiltered serves prune both
     slice.select(col("vec_id"), col("label"), col("embedding"),
         col("norm2"))
       .join(asg.select("vec_id", "cent_id"), "vec_id")
       .withColumn("nb", pmod(col("vec_id"), lit(buckets)))
       .repartition(col("nb"))
       .write.mode("overwrite").partitionBy("nb").parquet(s"$root/nodes")
+  }
+
+  /** Build one slice's flat graph layout + the two layer tables at
+    * `root`: entryhubs (eh, eemb, enorm2 — S rows, read first) and
+    * hubs2 (the full hub table partitioned by its entry assignment). */
+  private[graft] def buildHierHnswIndex(spark: SparkSession, slice: DataFrame,
+      root: String): Unit = {
+    buildGraphLayout(spark, slice, root)
     buildHierLayers(spark, root)
   }
 
@@ -1118,8 +1062,7 @@ object SimilarityQueries {
     * first-half) — the q_sim_ivf_cells dial on the graph tier. */
   private[graft] def hierHnswIndexes(spark: SparkSession,
       dir: String): (String, String) =
-    hierHnswCache.getOrElseUpdate((spark, dir), {
-      import graft.streaming.PartitionedStore
+    hierHnswCache((spark, dir)) {
       val v = vectors(spark, dir)
       val rootF = indexRoot("hnswhierfull", dir)
       val nn = v.agg(count(lit(1)).as("n"))
@@ -1132,9 +1075,7 @@ object SimilarityQueries {
       // that root is never mutated after its memoized build — r16,
       // VERDICT r15 item #1): copy them and derive only the two layer
       // tables, instead of re-running the engine's most expensive
-      // build a second time. Memoized build forced on THIS thread —
-      // TrieMap.getOrElseUpdate is not atomic, so racing it from the
-      // Future could double-build.
+      // build a second time.
       val base = persistedHnswIndex(spark, dir)
       // independent derivations at disjoint roots — overlap the two
       // jobs' tails from two driver threads (guide §2.6)
@@ -1142,16 +1083,13 @@ object SimilarityQueries {
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
       val bF = Future {
-        PartitionedStore.removeTree(new java.io.File(rootF))
-        PartitionedStore.copyTree(
-          new java.io.File(base), new java.io.File(rootF))
-        resetBuckets(spark, rootF, Some(graphBuckets(spark, base)))
+        copyGraphLayout(spark, base, rootF)
         buildHierLayers(spark, rootF)
       }
       val bH = Future(buildHierHnswIndex(spark, half, rootH))
       Await.result(bF, Duration.Inf); Await.result(bH, Duration.Inf)
       (rootF, rootH)
-    })
+    }
 
   /** The hierarchical entry frame: scan the S-row layer-1 table, pick
     * each query's entry group, read ONLY those groups' layer-0
@@ -1327,8 +1265,8 @@ object SimilarityQueries {
         && !col("cent_id").isin(staleCells: _*))
       .unionByName(newRows)
       .repartition(col("eh"))
-    PartitionedStore.replacePartitions(spark, s"$root/hubs2", "eh",
-      merged, touched)
+    PartitionedStore.replacePartitions(spark, s"$root/hubs2", Seq("eh"),
+      merged, touched.map(Seq(_)), Int.MaxValue)
   }
 
   /** The reelect action: wholesale layer rebuild from current hubs +
@@ -1359,8 +1297,7 @@ object SimilarityQueries {
     rounds
   }
 
-  private val hierMaintCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private[graft] val hierMaintCache = Memo[Key, String]()
 
   /** Memoized worn-hier scenario: full hier build, hard delete of
     * vec_id%10=3 with dead-hub repair (which overwrites `hubs` and
@@ -1368,18 +1305,14 @@ object SimilarityQueries {
     * fixed point; returns the root. */
   private[graft] def hierMaintIndex(spark: SparkSession,
       dir: String): String =
-    hierMaintCache.getOrElseUpdate((spark, dir), {
-      import graft.streaming.PartitionedStore
+    hierMaintCache((spark, dir)) {
       val root = indexRoot("hnswhiermaint", dir)
       // the pristine full-corpus hier layout is hierHnswIndexes' first
       // root, content-identical by construction (same slice, same
       // deterministic builder, and that root is never mutated) — copy
       // it instead of re-running the full build (r14 judge item #1)
       val src = hierHnswIndexes(spark, dir)._1
-      PartitionedStore.removeTree(new java.io.File(root))
-      PartitionedStore.copyTree(
-        new java.io.File(src), new java.io.File(root))
-      resetBuckets(spark, root, Some(graphBuckets(spark, src)))
+      copyGraphLayout(spark, src, root)
       val buckets = graphBuckets(spark, root)
       val del = vectors(spark, dir).filter(delPredicate).select("vec_id")
       deleteHnswNodes(spark, root, del, buckets)
@@ -1387,7 +1320,7 @@ object SimilarityQueries {
         vectors(spark, dir).filter(!delPredicate), buckets)
       resolveHierStaleness(spark, root)
       root
-    })
+    }
 
   // ---- streaming upsert into the graph tier (r12 judge item #6): the
   // q_stream_index_upsert landing discipline over q_sim_index_hnsw_
@@ -1412,14 +1345,12 @@ object SimilarityQueries {
     * but not centroids. Counting it from parquet per serve / per
     * micro-batch was one fixed-cost job each time (guide §1.2 per-task
     * work): the graph serves, the streaming landings, and every
-    * maintenance pass all start with this number. Cleared with the other
-    * memos by [[clearCache]]. */
-  private val bucketCountCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
+    * maintenance pass all start with this number. Dropped with every
+    * other memo by [[Memo.clearAll]]. */
+  private val bucketCountCache = Memo[Key, Long]()
 
   private[graft] def graphBuckets(spark: SparkSession, root: String): Long =
-    bucketCountCache.getOrElseUpdate((spark, root),
-      spark.read.parquet(s"$root/centroids").count())
+    bucketCountCache((spark, root))(spark.read.parquet(s"$root/centroids").count())
 
   /** Invalidate — and, when the count is already known (layout copies:
     * the source root's memoized count IS the copy's), seed — the
@@ -1537,8 +1468,8 @@ object SimilarityQueries {
           .unionByName(landedAdj)
           .distinct()
           .repartition(col("sb")))
-      PartitionedStore.replacePartitions(spark, s"$root/adj", "sb",
-        merged, sbs, crashAfterSwaps)
+      PartitionedStore.replacePartitions(spark, s"$root/adj", Seq("sb"),
+        merged, sbs.map(Seq(_)), crashAfterSwaps)
       if (crashAfterSwaps < sbs.size) return sbs
     }
     if (new java.io.File(s"$root/ingest_nodes").exists()) {
@@ -1558,8 +1489,8 @@ object SimilarityQueries {
             .withColumn("rn", row_number().over(byVec))
             .filter(col("rn") === 1).drop("rn")
             .repartition(col("nb")))
-        PartitionedStore.replacePartitions(spark, s"$root/nodes", "nb",
-          mergedN, nbs, Int.MaxValue)
+        PartitionedStore.replacePartitions(spark, s"$root/nodes", Seq("nb"),
+          mergedN, nbs.map(Seq(_)), Int.MaxValue)
       }
       PartitionedStore.removeTree(new java.io.File(s"$root/ingest_nodes"))
     }
@@ -1567,8 +1498,28 @@ object SimilarityQueries {
     sbs
   }
 
-  private val hnswStreamUpsertCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  /** Stream `rows` through `land`, one call per micro-batch, to
+    * completion under the tiny-state streaming regime: the rows are
+    * staged as 4 files read 2 per trigger, so `land` sees two batches.
+    * `name` (a [[graft.streaming.Streams.fresh]] name) keys the staged
+    * source and the checkpoint. Every index ingest and streaming serve
+    * here runs through this. */
+  private def streamBatches(spark: SparkSession, name: String,
+      rows: DataFrame)(land: (DataFrame, Long) => Unit): Unit = {
+    import graft.streaming.Streams
+    GraftQuery.withTinyStateStreaming(spark, 8) {
+      val q = Streams.stagedFileStream(spark, rows, name, files = 4,
+          filesPerTrigger = 2)
+        .writeStream.queryName(name)
+        .option("checkpointLocation", Streams.ckpt(name))
+        .foreachBatch(land)
+        .start()
+      q.processAllAvailable()
+      q.stop()
+    }
+  }
+
+  private val hnswStreamUpsertCache = Memo[Key, String]()
 
   /** Memoized: base graph build (vec_id%10<>9) + streamed landing of
     * the %10=9 arrivals (4 staged files, 2 per trigger -> 2
@@ -1578,31 +1529,19 @@ object SimilarityQueries {
     * planner's (IndexMaintenanceSpec drives the fold + redelivery). */
   private[graft] def streamUpsertedHnswIndex(spark: SparkSession,
       dir: String): String =
-    hnswStreamUpsertCache.getOrElseUpdate((spark, dir), {
+    hnswStreamUpsertCache((spark, dir)) {
       import graft.streaming.Streams
       val root = indexRoot("hnswstreamupsert", dir)
       seedFromBase(spark, dir, root)
-      val name = Streams.fresh("stream_index_hnsw_upsert", dir)
-      GraftQuery.withTinyStateStreaming(spark, 8) {
-        val src = Streams.stagedFileStream(spark,
-          Tables(spark, dir).embeddings
-            .filter(col("vec_id") % 10 === 9)
-            .select(col("vec_id"), col("label"), col("embedding")),
-          name, files = 4, filesPerTrigger = 2)
-        val q = src.writeStream.queryName(name)
-          .option("checkpointLocation", Streams.ckpt(name))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            landGraphIngestBatch(batch, id, root); ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+      streamBatches(spark, Streams.fresh("stream_index_hnsw_upsert", dir),
+        Tables(spark, dir).embeddings.filter(col("vec_id") % 10 === 9)
+          .select(col("vec_id"), col("label"), col("embedding"))) {
+        (batch, id) => landGraphIngestBatch(batch, id, root)
       }
       root
-    })
+    }
 
-  private val hierStreamFoldCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private[graft] val hierStreamFoldCache = Memo[Key, String]()
 
   /** Memoized: the hier tier driven from the STREAMING fold path (r13
     * judge item #5 — the layer tables previously only healed via the
@@ -1619,7 +1558,7 @@ object SimilarityQueries {
     * hubs)), which is what the gate's oracle states. */
   private[graft] def streamFoldedHierIndex(spark: SparkSession,
       dir: String): String =
-    hierStreamFoldCache.getOrElseUpdate((spark, dir), {
+    hierStreamFoldCache((spark, dir)) {
       import graft.streaming.Streams
       val root = indexRoot("hnswhierfold", dir)
       // hier-over-base-slice = the shared base layout + the two layer
@@ -1627,21 +1566,10 @@ object SimilarityQueries {
       // tables for this slice, then buildHierLayers) — copy + layers
       seedFromBase(spark, dir, root)
       buildHierLayers(spark, root)
-      val name = Streams.fresh("stream_index_hnsw_hier_fold", dir)
-      GraftQuery.withTinyStateStreaming(spark, 8) {
-        val src = Streams.stagedFileStream(spark,
-          Tables(spark, dir).embeddings
-            .filter(col("vec_id") % 10 === 9)
-            .select(col("vec_id"), col("label"), col("embedding")),
-          name, files = 4, filesPerTrigger = 2)
-        val q = src.writeStream.queryName(name)
-          .option("checkpointLocation", Streams.ckpt(name))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            landGraphIngestBatch(batch, id, root); ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+      streamBatches(spark, Streams.fresh("stream_index_hnsw_hier_fold", dir),
+        Tables(spark, dir).embeddings.filter(col("vec_id") % 10 === 9)
+          .select(col("vec_id"), col("label"), col("embedding"))) {
+        (batch, id) => landGraphIngestBatch(batch, id, root)
       }
       // planner pass 1: fold the landed generations (hubs untouched —
       // the runner's hier step observes no staleness and does nothing)
@@ -1660,7 +1588,7 @@ object SimilarityQueries {
       require(p3.actions.isEmpty,
         s"graph+hier maintenance did not converge: $p3")
       root
-    })
+    }
 
   // ---- delete propagation + graph repair on the persisted HNSW
   // layout (r11): the graph index is the hard delete case — removing a
@@ -1680,8 +1608,7 @@ object SimilarityQueries {
   // edges keep their build-time ranks (no re-kNN here — that is
   // [[repairHnswGraph]]'s job, gated by q_sim_index_hnsw_repair).
 
-  private val hnswDeleteCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val hnswDeleteCache = Memo[Key, String]()
 
   /** The graph tier's node hard-delete core, shared by the delete gate
     * and the repair scenario: remove the delete set's payload rows and
@@ -1695,9 +1622,9 @@ object SimilarityQueries {
       del: DataFrame, buckets: Long): Unit = {
     import graft.streaming.PartitionedStore
     // payload delete: buckets resolve from the ids themselves
-    PartitionedStore.deleteKeys(spark, s"$root/nodes", "nb",
+    PartitionedStore.deleteKeys(spark, s"$root/nodes", Seq("nb"),
       del.withColumn("nb", pmod(col("vec_id"), lit(buckets))),
-      Seq("vec_id"))
+      Seq("vec_id"), Int.MaxValue)
     // edge delete: out-edges from a pruned read of the deleted
     // nodes' buckets; incident edges are their symmetric flips
     val delSbs = del.withColumn("sb", pmod(col("vec_id"), lit(buckets)))
@@ -1712,8 +1639,8 @@ object SimilarityQueries {
         .select(col("dst").as("src"), col("src").as("dst"))
         .withColumn("sb", pmod(col("src"), lit(buckets))))
       .distinct()
-    PartitionedStore.deleteKeys(spark, s"$root/adj", "sb",
-      delEdges, Seq("src", "dst"))
+    PartitionedStore.deleteKeys(spark, s"$root/adj", Seq("sb"),
+      delEdges, Seq("src", "dst"), Int.MaxValue)
   }
 
   /** Copy the persisted HNSW layout, hard-delete vec_id%10=3 (payload
@@ -1721,22 +1648,17 @@ object SimilarityQueries {
     * cells whose hub died; returns the root (memoized). */
   private[graft] def deletedHnswIndex(spark: SparkSession,
       dir: String): String =
-    hnswDeleteCache.getOrElseUpdate((spark, dir), {
-      import graft.streaming.PartitionedStore
-      import org.apache.spark.sql.expressions.Window
+    hnswDeleteCache((spark, dir)) {
       val root = indexRoot("hnswdeleted", dir)
       val src = persistedHnswIndex(spark, dir)
-      PartitionedStore.removeTree(new java.io.File(root))
-      PartitionedStore.copyTree(
-        new java.io.File(src), new java.io.File(root))
-      resetBuckets(spark, root, Some(graphBuckets(spark, src)))
+      copyGraphLayout(spark, src, root)
       val buckets = graphBuckets(spark, root)
       val del = vectors(spark, dir).filter(delPredicate).select("vec_id")
       deleteHnswNodes(spark, root, del, buckets)
       repairDeadHubs(spark, root, del,
         vectors(spark, dir).filter(!delPredicate), buckets)
       root
-    })
+    }
 
   /** Hub repair after a node delete, shared by the delete gate and the
     * hier-maintenance scenario: re-elect ONLY the cells whose hub died
@@ -1810,39 +1732,14 @@ object SimilarityQueries {
   // buckets; every pre-existing file stays byte-identical
   // (spec-pinned).
 
-  private val hnswUpsertCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val hnswUpsertCache = Memo[Key, String]()
 
   /** Build the BASE graph (vec_id%10<>9) as a persisted layout at
-    * `root` — nodes carry their cent_id so insert candidate generation
-    * is one pushed filter, and their label so the filtered serve works
-    * on upserted lineages too (r13 ADVICE: every node-payload writer of
-    * the graph tier carries label now — a layout where only SOME
-    * generations have it silently drops arrivals from label-filtered
-    * candidacy via null labels). */
+    * `root`. */
   private[graft] def buildBaseHnswIndex(spark: SparkSession, dir: String,
-      root: String): Unit = {
-    val v = vectors(spark, dir)
-    val vb = v.filter(col("vec_id") % 10 =!= 9)
-    val (asgB, hubB, adjB) = hnswIndexFrames(vb)
-    val nnb = vb.agg(count(lit(1)).as("n"))
-    vb.crossJoin(broadcast(nnb))
-      .filter(col("vec_id") < ceil(sqrt(col("n"))).cast("long"))
-      .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"),
-        col("norm2").as("cnorm2"))
-      .write.mode("overwrite").parquet(s"$root/centroids")
-    resetBuckets(spark, root)
-    hubB.write.mode("overwrite").parquet(s"$root/hubs")
-    val buckets = graphBuckets(spark, root)
-    adjB.withColumn("sb", pmod(col("src"), lit(buckets)))
-      .repartition(col("sb"))
-      .write.mode("overwrite").partitionBy("sb").parquet(s"$root/adj")
-    vb.select(col("vec_id"), col("label"), col("embedding"), col("norm2"))
-      .join(asgB.select("vec_id", "cent_id"), "vec_id")
-      .withColumn("nb", pmod(col("vec_id"), lit(buckets)))
-      .repartition(col("nb"))
-      .write.mode("overwrite").partitionBy("nb").parquet(s"$root/nodes")
-  }
+      root: String): Unit =
+    buildGraphLayout(spark,
+      vectors(spark, dir).filter(col("vec_id") % 10 =!= 9), root)
 
   /** Link + append the vec_id%10=9 arrivals into the base graph at
     * `root`: route to their frozen cell, link to top-8 base cell-mates
@@ -1889,8 +1786,7 @@ object SimilarityQueries {
       .write.mode("append").partitionBy("nb").parquet(s"$root/nodes")
   }
 
-  private val hnswBaseCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private[graft] val hnswBaseCache = Memo[Key, String]()
 
   /** Memoized SHARED base layout over the vec_id%10<>9 slice. Four
     * scenario roots (upsert, stream-upsert, repair-via-upsert,
@@ -1899,44 +1795,53 @@ object SimilarityQueries {
     * construction (same slice, same deterministic build), so the
     * recomputation bought nothing but sweep wall-clock (r14 judge item
     * #1: the rebuilds were a top cost of the over-budget bench sweep).
-    * Scenarios now [[graft.streaming.PartitionedStore.copyTree]] this
-    * tree and mutate the COPY; this root itself is never served from
-    * or mutated after build, so copies taken at any later time see the
-    * same bytes. */
+    * Scenarios now [[copyGraphLayout]] this tree and mutate the COPY;
+    * this root itself is never served from or mutated after build, so
+    * copies taken at any later time see the same bytes. */
   private[graft] def baseHnswLayout(spark: SparkSession,
       dir: String): String =
-    hnswBaseCache.getOrElseUpdate((spark, dir), {
-      import graft.streaming.PartitionedStore
+    hnswBaseCache((spark, dir)) {
       val root = indexRoot("hnswbase", dir)
-      PartitionedStore.removeTree(new java.io.File(root))
       buildBaseHnswIndex(spark, dir, root)
       root
-    })
+    }
 
-  /** Wipe `root` and seed it with a copy of the shared base layout
-    * (bucket-count memo seeded from the source's — a copy's centroid
-    * count IS the source's, and this drops the count job each scenario
-    * copy paid on first touch). */
-  private def seedFromBase(spark: SparkSession, dir: String,
-      root: String): Unit = {
+  /** Wipe `root` and fill it with a copy of the layout at `src` — how
+    * every scenario that mutates a shared layout starts, so sibling
+    * gates keep serving the original. The wipe is also the
+    * pid-recycling guard (ADVICE r10): a crashed prior run under a
+    * recycled pid could leave stale generations under `root`. */
+  private def copyLayout(src: String, root: String): Unit = {
     import graft.streaming.PartitionedStore
-    val base = baseHnswLayout(spark, dir)
     PartitionedStore.removeTree(new java.io.File(root))
-    PartitionedStore.copyTree(
-      new java.io.File(base), new java.io.File(root))
-    resetBuckets(spark, root, Some(graphBuckets(spark, base)))
+    PartitionedStore.copyTree(new java.io.File(src), new java.io.File(root))
   }
+
+  /** [[copyLayout]] of a graph layout, with the copy's bucket-count memo
+    * seeded from the source's — a copy's centroid count IS the
+    * source's, and this drops the count job each copy paid on first
+    * touch. */
+  private def copyGraphLayout(spark: SparkSession, src: String,
+      root: String): Unit = {
+    copyLayout(src, root)
+    resetBuckets(spark, root, Some(graphBuckets(spark, src)))
+  }
+
+  /** Seed `root` with a copy of the shared base graph layout. */
+  private def seedFromBase(spark: SparkSession, dir: String,
+      root: String): Unit =
+    copyGraphLayout(spark, baseHnswLayout(spark, dir), root)
 
   /** Memoized base build + arrival linking (appends are not
     * idempotent — reps must not re-run); returns the root. */
   private[graft] def upsertedHnswIndex(spark: SparkSession,
       dir: String): String =
-    hnswUpsertCache.getOrElseUpdate((spark, dir), {
+    hnswUpsertCache((spark, dir)) {
       val root = indexRoot("hnswupsert", dir)
       seedFromBase(spark, dir, root)
       upsertHnswIncoming(spark, dir, root)
       root
-    })
+    }
 
   // ---- periodic graph repair + graph-tier planner (r12, closing r11
   // Missing #2/#4): both maintenance docs above defer new-new links,
@@ -2006,10 +1911,11 @@ object SimilarityQueries {
         .select(col("vec_id").as("hub_id")), Seq("hub_id"), "left_anti")
       .count()
     val over =
-      PartitionedStore.partFileCounts(s"$root/adj", "sb")
-        .filter(_._2 > maxFiles).keys.toSeq.sorted.map(v => s"adj/sb=$v") ++
-      PartitionedStore.partFileCounts(s"$root/nodes", "nb")
-        .filter(_._2 > maxFiles).keys.toSeq.sorted.map(v => s"nodes/nb=$v")
+      Seq("adj" -> "sb", "nodes" -> "nb").flatMap { case (t, b) =>
+        PartitionedStore.partFileCounts(s"$root/$t", Seq(b))
+          .filter(_._2 > maxFiles).keys.map(_.head).toSeq.sorted
+          .map(v => s"$t/$b=$v")
+      }
     // streamed-upsert landings pending a fold (r12 judge item #6)
     val gens = Option(new java.io.File(s"$root/ingest_adj").listFiles())
       .toSeq.flatten
@@ -2106,8 +2012,8 @@ object SimilarityQueries {
     if (plan.fold) foldGraphIngest(spark, root)
     if (plan.repair) repairHnswGraph(spark, root)
     if (plan.compact || plan.repair) {
-      PartitionedStore.compact(spark, s"$root/adj", "sb", plan.maxFiles)
-      PartitionedStore.compact(spark, s"$root/nodes", "nb", plan.maxFiles)
+      PartitionedStore.compact(spark, s"$root/adj", Seq("sb"), plan.maxFiles)
+      PartitionedStore.compact(spark, s"$root/nodes", Seq("nb"), plan.maxFiles)
       ()
     }
     if (new java.io.File(s"$root/hubs2").exists()
@@ -2116,9 +2022,8 @@ object SimilarityQueries {
     }
   }
 
-  private val hnswRepairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (String, GraphMaintenancePlan, GraphMaintenancePlan)]
+  private val hnswRepairCache = Memo[Key,
+      (String, GraphMaintenancePlan, GraphMaintenancePlan)]()
 
   /** Memoized repair scenario: base graph + upsert wave (%10=9) +
     * delete wave (%10=3, payload/edges only — entry refresh is the
@@ -2126,24 +2031,20 @@ object SimilarityQueries {
     * post); the spec pins the wear signals and their convergence. */
   private[graft] def repairedHnswIndex(spark: SparkSession,
       dir: String): (String, GraphMaintenancePlan, GraphMaintenancePlan) =
-    hnswRepairCache.getOrElseUpdate((spark, dir), {
-      import graft.streaming.PartitionedStore
+    hnswRepairCache((spark, dir)) {
       val root = indexRoot("hnswrepair", dir)
       // base + upsert wave is exactly the COMPLETED upsert scenario's
       // content (that root is never mutated after its memoized build) —
       // copy it instead of recomputing the two most expensive steps
       val src = upsertedHnswIndex(spark, dir)
-      PartitionedStore.removeTree(new java.io.File(root))
-      PartitionedStore.copyTree(
-        new java.io.File(src), new java.io.File(root))
-      resetBuckets(spark, root, Some(graphBuckets(spark, src)))
+      copyGraphLayout(spark, src, root)
       val buckets = graphBuckets(spark, root)
       deleteHnswNodes(spark, root,
         vectors(spark, dir).filter(delPredicate).select("vec_id"), buckets)
       val pre = planGraphMaintenance(spark, root)
       runGraphMaintenance(spark, root, pre)
       (root, pre, planGraphMaintenance(spark, root))
-    })
+    }
 
   // ===== index-scale dial: cells ∝ √n (r7 judge item #5) =================
   //
@@ -2167,11 +2068,7 @@ object SimilarityQueries {
     * every cell gate). Exposed for the RecallSpec scaling pins. */
   private[graft] def sqrtCellAssignment(slice: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val nn = slice.agg(count(lit(1)).as("n"))
-    val c = slice.crossJoin(broadcast(nn))
-      .filter(col("vec_id") < ceil(sqrt(col("n"))).cast("long"))
-      .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"),
-        col("norm2").as("cnorm2"))
+    val c = sqrtCentroids(slice)
     val byVec = Window.partitionBy(col("vec_id"))
       .orderBy(col("cos_c").desc, col("cent_id"))
     slice.crossJoin(broadcast(c))
@@ -2290,25 +2187,19 @@ object SimilarityQueries {
     * once, return its root path. The write cost is paid on first touch
     * (measured by the bench's first rep); every later serve reads the
     * persisted copy. */
-  private val persistedIvfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val persistedIvfCache = Memo[Key, String]()
 
   private[graft] def persistedIvfIndex(spark: SparkSession,
       dir: String): String =
-    persistedIvfCache.getOrElseUpdate((spark, dir), {
+    persistedIvfCache((spark, dir)) {
       val v = vectors(spark, dir)
       val root = indexRoot("ivfindex", dir)
-      val nn = v.agg(count(lit(1)).as("n"))
-      v.crossJoin(broadcast(nn))
-        .filter(col("vec_id") < ceil(sqrt(col("n"))).cast("long"))
-        .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"),
-          col("norm2").as("cnorm2"))
-        .write.mode("overwrite").parquet(s"$root/centroids")
+      sqrtCentroids(v).write.mode("overwrite").parquet(s"$root/centroids")
       v.join(sqrtCellAssignment(v), "vec_id")
         .write.mode("overwrite").partitionBy("cent_id")
         .parquet(s"$root/cells")
       root
-    })
+    }
 
   /** Nearest-centroid assignment of `slice` against an explicit
     * centroid frame (cent_id, cemb, cnorm2): (vec_id, cent_id). The
@@ -2337,11 +2228,9 @@ object SimilarityQueries {
   // append partitioned by cent_id — cost O(incoming), untouched cell
   // dirs keep their files byte-identical (RecallSpec pins it).
 
-  private val upsertIvfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val upsertIvfCache = Memo[Key, String]()
 
-  private val ivfBaseCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private[graft] val ivfBaseCache = Memo[Key, String]()
 
   /** Memoized SHARED IVF base layout — the upsert/compact/stream-upsert
     * scenario roots copy this instead of recomputing the identical
@@ -2349,46 +2238,35 @@ object SimilarityQueries {
     * Never served from or mutated after build. */
   private[graft] def baseIvfLayout(spark: SparkSession,
       dir: String): String =
-    ivfBaseCache.getOrElseUpdate((spark, dir), {
+    ivfBaseCache((spark, dir)) {
       val root = indexRoot("ivfbase", dir)
       graft.streaming.PartitionedStore.removeTree(new java.io.File(root))
       buildBaseIvfIndex(spark, dir, root)
       root
-    })
-
-  /** Wipe `root` and seed it with a copy of the shared IVF base. */
-  private def seedFromIvfBase(spark: SparkSession, dir: String,
-      root: String): Unit = {
-    import graft.streaming.PartitionedStore
-    PartitionedStore.removeTree(new java.io.File(root))
-    PartitionedStore.copyTree(
-      new java.io.File(baseIvfLayout(spark, dir)), new java.io.File(root))
-  }
+    }
 
   /** Build the frozen-centroid BASE index (vec_id % 10 <> 9) at `root`:
     * centroids = base vectors with vec_id < ceil(sqrt(n_base)). */
   private[graft] def buildBaseIvfIndex(spark: SparkSession, dir: String,
       root: String): Unit = {
     val vb = vectors(spark, dir).filter(col("vec_id") % 10 =!= 9)
-    val nn = vb.agg(count(lit(1)).as("n"))
-    vb.crossJoin(broadcast(nn))
-      .filter(col("vec_id") < ceil(sqrt(col("n"))).cast("long"))
-      .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"),
-        col("norm2").as("cnorm2"))
-      .write.mode("overwrite").parquet(s"$root/centroids")
+    sqrtCentroids(vb).write.mode("overwrite").parquet(s"$root/centroids")
     val cents = spark.read.parquet(s"$root/centroids")
     vb.join(assignToCentroids(vb, cents), "vec_id")
       .write.mode("overwrite").partitionBy("cent_id")
       .parquet(s"$root/cells")
   }
 
-  /** Upsert the incoming slice (vec_id % 10 = 9) into the base index:
+  /** Upsert the incoming slice (vec_id % 10 = 9) into the base index —
+    * all of it, or only `wave` ∈ 0..2 of three waves — by
     * frozen-centroid assignment + an append touching ONLY the incoming
     * cells' partitions. */
   private[graft] def upsertIvfIncoming(spark: SparkSession, dir: String,
-      root: String): Unit = {
+      root: String, wave: Option[Int]): Unit = {
     val cents = spark.read.parquet(s"$root/centroids")
-    val inc = vectors(spark, dir).filter(col("vec_id") % 10 === 9)
+    val all = vectors(spark, dir).filter(col("vec_id") % 10 === 9)
+    val inc = wave.fold(all)(w =>
+      all.filter(pmod(floor(col("vec_id") / 10).cast("long"), lit(3)) === w))
     inc.join(assignToCentroids(inc, cents), "vec_id")
       .write.mode("append").partitionBy("cent_id").parquet(s"$root/cells")
   }
@@ -2397,15 +2275,12 @@ object SimilarityQueries {
     * not re-run it); returns the index root. */
   private[graft] def upsertedIvfIndex(spark: SparkSession,
       dir: String): String =
-    upsertIvfCache.getOrElseUpdate((spark, dir), {
+    upsertIvfCache((spark, dir)) {
       val root = indexRoot("ivfupsert", dir)
-      // seedFromIvfBase wipes the root first — also the pid-recycling
-      // guard (ADVICE r10): a crashed prior run under a recycled pid
-      // could leave stale appended generations
-      seedFromIvfBase(spark, dir, root)
-      upsertIvfIncoming(spark, dir, root)
+      copyLayout(baseIvfLayout(spark, dir), root)
+      upsertIvfIncoming(spark, dir, root, None)
       root
-    })
+    }
 
   // ---- index file hygiene after upserts (r10, judge item #2): every
   // upsert wave APPENDS a file generation into each touched cell dir —
@@ -2420,33 +2295,20 @@ object SimilarityQueries {
   // same frozen-centroid assignment), which is exactly the compaction
   // contract: file layout changes, content never.
 
-  private val compactIvfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
-  /** One incoming wave (`wave` ∈ 0..2 over the vec_id%10=9 slice):
-    * frozen-centroid assignment + an append touching only the wave's
-    * cells. */
-  private[graft] def upsertIvfWave(spark: SparkSession, dir: String,
-      root: String, wave: Int): Unit = {
-    val cents = spark.read.parquet(s"$root/centroids")
-    val inc = vectors(spark, dir).filter(col("vec_id") % 10 === 9)
-      .filter(pmod(floor(col("vec_id") / 10).cast("long"), lit(3)) === wave)
-    inc.join(assignToCentroids(inc, cents), "vec_id")
-      .write.mode("append").partitionBy("cent_id").parquet(s"$root/cells")
-  }
+  private val compactIvfCache = Memo[Key, String]()
 
   /** Memoized base build + 3 upsert waves + compaction; returns the
     * index root (appends are not idempotent — reps must not re-run). */
   private[graft] def compactedIvfIndex(spark: SparkSession,
       dir: String): String =
-    compactIvfCache.getOrElseUpdate((spark, dir), {
+    compactIvfCache((spark, dir)) {
       val root = indexRoot("ivfcompact", dir)
-      seedFromIvfBase(spark, dir, root)
-      (0 until 3).foreach(w => upsertIvfWave(spark, dir, root, w))
+      copyLayout(baseIvfLayout(spark, dir), root)
+      (0 until 3).foreach(w => upsertIvfIncoming(spark, dir, root, Some(w)))
       graft.streaming.PartitionedStore.compact(
-        spark, s"$root/cells", "cent_id", maxFiles = 1)
+        spark, s"$root/cells", Seq("cent_id"), maxFiles = 1)
       root
-    })
+    }
 
   // ---- ingest fold (r10, completing the streaming story): the
   // replay-safe bid= landing dirs are the WRITE-optimized layout; left
@@ -2461,40 +2323,68 @@ object SimilarityQueries {
   // the fold converges instead of duplicating — the same idempotence
   // argument as SnapshotStore's LWW merge.
 
-  private val foldCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val foldCache = Memo[Key, String]()
 
-  /** Fold all landed bid= generations at `root` into the base cells;
-    * returns the touched cell list. `crashAfterSwaps` injects a crash
-    * for the recovery spec. `cellsSub`/`ingestSub` select the tier (r11
-    * judge item #2): the raw cells/ingest pair by default, the
-    * compressed codes/codes_ingest pair for the PQ tier — the identical
-    * keyed staged-swap merge applies because both layouts share the
-    * (vec_id-keyed rows, cent_id partitions) shape; only the payload
-    * columns differ (raw embedding vs 8-byte code array). */
+  /** One partitioned index tier under a root: its live `table` and its
+    * landing `ingest` subdirectory (one `bid=` generation per
+    * micro-batch, partitioned like the table), and the partition `keys`
+    * rows are placed by — the last key is the cell. Rows are
+    * vec_id-keyed in every tier; only the payload columns differ.
+    * `tracksImbalance` says whether the planner reads the per-cell
+    * imbalance, `retrains` whether a warm-start retrain may repair it. */
+  sealed abstract class IndexTier(val table: String, val ingest: String,
+      val keys: Seq[String], val tracksImbalance: Boolean,
+      val retrains: Boolean)
+
+  /** Raw vectors in √n cells — the one tier a retrain repairs. */
+  case object RawTier
+      extends IndexTier("cells", "ingest", Seq("cent_id"), true, true)
+
+  /** PQ codes in √n cells. Imbalance is untracked: re-clustering the
+    * coarse quantizer would invalidate every stored code, so a drifted
+    * codes tier is re-encoded against a retrained RAW tier — an
+    * external decision, like deletes. */
+  case object CodesTier
+      extends IndexTier("codes", "codes_ingest", Seq("cent_id"), false, false)
+
+  /** Raw vectors in (label, cent_id) leaves. Per-label imbalance is
+    * observability only: the 16 seed centroids are shared across every
+    * label, so re-seeding would invalidate the cell level of every
+    * row's two-level address. */
+  case object FilteredTier extends IndexTier("cells", "ingest",
+      Seq("label", "cent_id"), true, false)
+
+  /** Fold all landed bid= generations of `tier` at `root` into its live
+    * table; returns the touched partition tuples. Touched tuples are
+    * driver metadata from the landed rows, the live read prunes to
+    * exactly those partitions (one disjunct per leading key value), the
+    * merge is keyed last-writer-wins by vec_id, the install is a staged
+    * swap, and the landed dirs are removed last. `crashAfterSwaps`
+    * injects a crash for the recovery specs. */
   private[graft] def foldIngest(spark: SparkSession, root: String,
-      crashAfterSwaps: Int = Int.MaxValue,
-      cellsSub: String = "cells", ingestSub: String = "ingest"): Seq[Any] = {
+      tier: IndexTier, crashAfterSwaps: Int = Int.MaxValue): Seq[Seq[Any]] = {
     import org.apache.spark.sql.expressions.Window
     import graft.streaming.PartitionedStore
-    val ingestDir = new java.io.File(s"$root/$ingestSub")
-    PartitionedStore.recoverPendingDelete(s"$root/$cellsSub")
+    val table = s"$root/${tier.table}"
+    val ingestDir = new java.io.File(s"$root/${tier.ingest}")
+    val keys = tier.keys.map(col)
+    PartitionedStore.recoverPendingDelete(table)
     if (!ingestDir.exists()) return Seq.empty
-    val ingest = spark.read.parquet(s"$root/$ingestSub").drop("bid")
-    // touched cells: driver metadata, ≤ cells values
-    val touched = ingest.select(col("cent_id")).distinct()
-      .collect().map(_.get(0)).toSeq
+    val ingest = spark.read.parquet(s"$root/${tier.ingest}").drop("bid")
+    // touched partitions: driver metadata, ≤ partitions tuples
+    val touched = ingest.select(keys: _*).distinct()
+      .collect().map(r => tier.keys.indices.map(r.get)).toSeq
     if (touched.nonEmpty) {
-      val live = spark.read.parquet(s"$root/$cellsSub")
-        .filter(col("cent_id").isin(touched: _*))
-      val byVec = Window.partitionBy(col("vec_id")).orderBy(col("cent_id"))
+      val live = spark.read.parquet(table)
+        .filter(PartitionedStore.pruneExpr(tier.keys, touched))
+      val byVec = Window.partitionBy(col("vec_id")).orderBy(keys: _*)
       val merged = Scratch.checkpoint(
         live.unionByName(ingest)
           .withColumn("rn", row_number().over(byVec))
           .filter(col("rn") === 1).drop("rn")
-          .repartition(col("cent_id")))
-      PartitionedStore.replacePartitions(spark, s"$root/$cellsSub", "cent_id",
-        merged, touched, crashAfterSwaps)
+          .repartition(keys: _*))
+      PartitionedStore.replacePartitions(spark, table, tier.keys, merged,
+        touched, crashAfterSwaps)
       // injected crash: staging committed, ingest still present — the
       // next fold completes the swaps and re-merges idempotently
       if (crashAfterSwaps < touched.size) return touched
@@ -2506,15 +2396,12 @@ object SimilarityQueries {
   /** Memoized copy of the streamed index + fold; returns the root. */
   private[graft] def foldedIvfIndex(spark: SparkSession,
       dir: String): String =
-    foldCache.getOrElseUpdate((spark, dir), {
-      import graft.streaming.PartitionedStore
+    foldCache((spark, dir)) {
       val root = indexRoot("ivffold", dir)
-      PartitionedStore.copyTree(
-        new java.io.File(streamUpsertedIvfIndex(spark, dir)),
-        new java.io.File(root))
-      foldIngest(spark, root)
+      copyLayout(streamUpsertedIvfIndex(spark, dir), root)
+      foldIngest(spark, root, RawTier)
       root
-    })
+    }
 
   // ---- stats-driven maintenance planner (r11, judge item #2): the
   // observability gate (q_sim_index_stats) computes exactly the signals
@@ -2535,16 +2422,22 @@ object SimilarityQueries {
   // external command, not an observable decay — the gate's scenario
   // applies one as part of the wear instead.
 
-  /** The signals read from a layout plus the decisions they imply —
-    * decisions are pure functions of the signals, so "the planner chose
-    * exactly the triggered passes" is true by construction and the spec
-    * pins the signal values themselves. */
-  final case class MaintenancePlan(pendingGens: Int,
-      overBound: Seq[String], imbalance: Double,
-      maxFiles: Int, imbalanceMax: Double) {
+  /** A tier's signals plus the decisions they imply — decisions are
+    * pure functions of the signals, so "the planner chose exactly the
+    * triggered passes" is true by construction and the spec pins the
+    * signal values themselves. `overBound` holds partition tuples as
+    * dir-name strings; `imbalances` holds the max_cell·n_cells/n_rows
+    * factor per value of the leading (non-cell) keys — one whole-tier
+    * entry on a one-key tier. */
+  final case class MaintenancePlan(tier: IndexTier, pendingGens: Int,
+      overBound: Seq[Seq[String]], imbalances: Map[String, Double]) {
+    def maxImbalance: Double =
+      if (imbalances.isEmpty) 0.0 else imbalances.values.max
+    /** The whole-tier imbalance (a one-key tier's only entry). */
+    def imbalance: Double = maxImbalance
     def fold: Boolean = pendingGens > 0
     def compact: Boolean = overBound.nonEmpty
-    def retrain: Boolean = imbalance > imbalanceMax
+    def retrain: Boolean = tier.retrains && imbalance > PLANNER_IMBALANCE_MAX
     def actions: Seq[String] =
       Seq("fold" -> fold, "compact" -> compact, "retrain" -> retrain)
         .collect { case (a, true) => a }
@@ -2558,74 +2451,70 @@ object SimilarityQueries {
     * a seeded Lloyd round pays for its corpus pass. */
   private[graft] val PLANNER_IMBALANCE_MAX = 4.0
 
-  /** Read a cent_id-partitioned index root's maintenance signals:
-    * pending ingest generations and per-cell file counts from the
-    * directory layout (driver metadata), the imbalance factor from one
-    * aggregation over the layouts themselves (cells ∪ landed ingest —
-    * the stats reflect what is actually on disk).
-    *
-    * `cellsSub`/`ingestSub` select the TIER the planner observes (r11
-    * judge item #2 extended one tier down): the raw layout's
-    * cells/ingest by default, the compressed layout's
-    * codes/codes_ingest for the PQ tier — same signals, same decisions,
-    * same fold/compact machinery. `trackImbalance = false` disables the
-    * retrain dial where retraining is not a legal repair (the codes
-    * tier: re-clustering the coarse quantizer would invalidate every
-    * stored code; the fix for a drifted codes tier is re-encoding
-    * against a retrained RAW tier, an external decision like deletes).
+  /** Read a tier's maintenance signals at `root`: pending ingest
+    * generations and per-partition file counts from the directory
+    * layout (driver metadata), the imbalance from one aggregation over
+    * the layouts themselves (table ∪ landed ingest — the stats reflect
+    * what is actually on disk).
     *
     * Empty/missing layouts are a valid observable state (ADVICE r11 —
     * everything deleted, or a root created but never loaded): all
     * signals read as healthy (no rows → no imbalance) instead of
     * throwing on the null aggregate. */
   private[graft] def planMaintenance(spark: SparkSession, root: String,
-      maxFiles: Int = PLANNER_MAX_FILES,
-      imbalanceMax: Double = PLANNER_IMBALANCE_MAX,
-      cellsSub: String = "cells", ingestSub: String = "ingest",
-      trackImbalance: Boolean = true): MaintenancePlan = {
+      tier: IndexTier): MaintenancePlan = {
     import graft.streaming.PartitionedStore
-    val gens = Option(new java.io.File(s"$root/$ingestSub").listFiles())
+    val ingest = s"$root/${tier.ingest}"
+    val gens = Option(new java.io.File(ingest).listFiles())
       .toSeq.flatten
       .count(f => f.isDirectory && f.getName.startsWith("bid="))
-    val cellsPath = s"$root/$cellsSub"
+    val table = s"$root/${tier.table}"
     val counts =
-      if (!PartitionedStore.exists(cellsPath)) Map.empty[String, Int]
-      else PartitionedStore.partFileCounts(cellsPath, "cent_id")
-    val over = counts.filter(_._2 > maxFiles).keys.toSeq.sorted
-    val hasCells = counts.values.sum > 0
-    val imb = if (!trackImbalance || !hasCells) 0.0 else {
-      val live = spark.read.parquet(cellsPath)
-        .select(col("vec_id"), col("cent_id"))
-      val all = if (gens > 0)
-        live.unionByName(spark.read.parquet(s"$root/$ingestSub")
-          .select(col("vec_id"), col("cent_id")))
-      else live
-      val r = all.groupBy(col("cent_id")).agg(count(lit(1)).as("n"))
-        .agg(count(lit(1)).as("c"), sum(col("n")).as("rows"),
-          max(col("n")).as("mx")).head()
-      // rows == 0 (fully-deleted cells layout: dirs exist, files empty)
-      // is healthy by definition
-      if (r.isNullAt(1) || r.getLong(1) == 0L) 0.0
-      else r.getLong(2).toDouble * r.getLong(0) / r.getLong(1)
-    }
-    MaintenancePlan(gens, over, imb, maxFiles, imbalanceMax)
+      if (!PartitionedStore.exists(table)) Map.empty[Seq[String], Int]
+      else PartitionedStore.partFileCounts(table, tier.keys)
+    val over = counts.filter(_._2 > PLANNER_MAX_FILES).keys.toSeq
+      .sortBy(_.mkString("/"))
+    val imb: Map[String, Double] =
+      if (!tier.tracksImbalance || counts.values.sum == 0) Map.empty
+      else {
+        val cols = ("vec_id" +: tier.keys).map(col)
+        val live = spark.read.parquet(table).select(cols: _*)
+        val all = if (gens > 0)
+          live.unionByName(spark.read.parquet(ingest).select(cols: _*))
+        else live
+        val groups = tier.keys.init
+        all.groupBy(tier.keys.map(col): _*).agg(count(lit(1)).as("n"))
+          .groupBy(groups.map(col): _*).agg(count(lit(1)).as("c"),
+            sum(col("n")).as("rows"), max(col("n")).as("mx"))
+          .collect().map { r =>
+            // rows == 0 (fully-deleted layout: dirs exist, files
+            // empty) is healthy by definition
+            val rows = r.getAs[java.lang.Long]("rows")
+            groups.indices.map(r.get).mkString("/") ->
+              (if (rows == null || rows == 0L) 0.0
+               else r.getAs[Long]("mx").toDouble * r.getAs[Long]("c")
+                 / rows.longValue)
+          }.toMap
+      }
+    MaintenancePlan(tier, gens, over, imb)
   }
 
-  /** Execute the planned repairs in dependency order: fold first (the
-    * landed generations must be IN the cells before file hygiene or a
+  /** Execute a plan's repairs in dependency order: fold first (the
+    * landed generations must be IN the table before file hygiene or a
     * membership repair can see them), then compact, then the seeded
-    * Lloyd round. Every pass is the gated staged-swap machinery. */
+    * Lloyd round (raw tier only). Every pass is the gated staged-swap
+    * machinery. */
   private[graft] def runMaintenance(spark: SparkSession, dir: String,
       root: String, plan: MaintenancePlan): Unit = {
-    if (plan.fold) foldIngest(spark, root)
-    if (plan.compact) graft.streaming.PartitionedStore.compact(
-      spark, s"$root/cells", "cent_id", plan.maxFiles)
+    if (plan.fold) foldIngest(spark, root, plan.tier)
+    if (plan.compact) graft.streaming.PartitionedStore.compact(spark,
+      s"$root/${plan.tier.table}", plan.tier.keys, PLANNER_MAX_FILES)
     if (plan.retrain) warmStartRetrain(spark, dir, root)
     ()
   }
 
-  private val plannerCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, MaintenancePlan, MaintenancePlan)]
+  private val plannerCache =
+    Memo[Key, (String, MaintenancePlan, MaintenancePlan)]()
 
   /** Memoized planner scenario: copy the streamed index (pending bid=
     * generations + multi-generation cells), apply the delete wear
@@ -2634,21 +2523,18 @@ object SimilarityQueries {
     * the decisions and the post-repair signals. */
   private[graft] def plannedIvfIndex(spark: SparkSession,
       dir: String): (String, MaintenancePlan, MaintenancePlan) =
-    plannerCache.getOrElseUpdate((spark, dir), {
-      import graft.streaming.PartitionedStore
+    plannerCache((spark, dir)) {
       val root = indexRoot("ivfplanner", dir)
-      PartitionedStore.removeTree(new java.io.File(root))
-      PartitionedStore.copyTree(
-        new java.io.File(streamUpsertedIvfIndex(spark, dir)),
-        new java.io.File(root))
+      copyLayout(streamUpsertedIvfIndex(spark, dir), root)
       val del = vectors(spark, dir).filter(delPredicate)
       val cents = spark.read.parquet(s"$root/centroids")
-      PartitionedStore.deleteKeys(spark, s"$root/cells", "cent_id",
-        assignToCentroids(del, cents), Seq("vec_id"))
-      val pre = planMaintenance(spark, root)
+      graft.streaming.PartitionedStore.deleteKeys(spark, s"$root/cells",
+        Seq("cent_id"), assignToCentroids(del, cents), Seq("vec_id"),
+        Int.MaxValue)
+      val pre = planMaintenance(spark, root, RawTier)
       runMaintenance(spark, dir, root, pre)
-      (root, pre, planMaintenance(spark, root))
-    })
+      (root, pre, planMaintenance(spark, root, RawTier))
+    }
 
   // ---- streaming serve against the persisted index (r11, judge item
   // #3): every ANN serve above runs over a BOUNDED query batch; the
@@ -2708,35 +2594,23 @@ object SimilarityQueries {
     // pid-recycling guard: a recycled pid's stale results root could
     // carry bid= dirs outside this run's batch range
     PartitionedStore.removeTree(new java.io.File(out))
-    val name = Streams.fresh("stream_index_serve", dir)
-    GraftQuery.withTinyStateStreaming(spark, 8) {
-      val src = Streams.stagedFileStream(spark,
-        Tables(spark, dir).embeddings
-          .filter(col("vec_id") % 50 === 40)
-          .select(col("vec_id"), col("embedding")),
-        name, files = 4, filesPerTrigger = 2)
-      val q = src.writeStream.queryName(name)
-        .option("checkpointLocation", Streams.ckpt(name))
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // the serving job's view per trigger: recover-then-read,
-          // fresh routing table, pruned cell scan. Deliberately NOT
-          // under the online-serve regime (r16): measured job counts
-          // are identical either way (the probe plan's only exchange
-          // is a broadcast), and AQE's partition coalescing is what
-          // keeps each bid= landing ONE part file.
-          PartitionedStore.recoverPendingDelete(
-            s"$root/cells", discardUncommitted = false)
-          val cents = spark.read.parquet(s"$root/centroids")
-          val b = batch.withColumn("norm2",
-            expr("vector_dot_dec(embedding, embedding)"))
-          probeServe(spark, s"$root/cells", "cell",
-            routeProbes(b, cents, nprobe = 2), "l2", 3)
-            .write.mode("overwrite").parquet(s"$out/bid=$id")
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    streamBatches(spark, Streams.fresh("stream_index_serve", dir),
+      Tables(spark, dir).embeddings.filter(col("vec_id") % 50 === 40)
+        .select(col("vec_id"), col("embedding"))) { (batch, id) =>
+      // the serving job's view per trigger: recover-then-read,
+      // fresh routing table, pruned cell scan. Deliberately NOT
+      // under the online-serve regime (r16): measured job counts
+      // are identical either way (the probe plan's only exchange
+      // is a broadcast), and AQE's partition coalescing is what
+      // keeps each bid= landing ONE part file.
+      PartitionedStore.recoverPendingDelete(
+        s"$root/cells", discardUncommitted = false)
+      val cents = spark.read.parquet(s"$root/centroids")
+      val b = batch.withColumn("norm2",
+        expr("vector_dot_dec(embedding, embedding)"))
+      probeServe(spark, s"$root/cells", "cell",
+        routeProbes(b, cents, nprobe = 2), "l2", 3)
+        .write.mode("overwrite").parquet(s"$out/bid=$id")
     }
     out
   }
@@ -2836,28 +2710,16 @@ object SimilarityQueries {
     val out = indexRoot("hnswstreamserve", dir)
     // pid-recycling guard, as in streamServedIndex
     graft.streaming.PartitionedStore.removeTree(new java.io.File(out))
-    val name = Streams.fresh("stream_index_hnsw_serve", dir)
-    GraftQuery.withTinyStateStreaming(spark, 8) {
-      val src = Streams.stagedFileStream(spark,
-        Tables(spark, dir).embeddings
-          .filter(col("vec_id") % 50 === 45)
-          .select(col("vec_id"), col("embedding")),
-        name, files = 4, filesPerTrigger = 2)
-      val q = src.writeStream.queryName(name)
-        .option("checkpointLocation", Streams.ckpt(name))
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // the hop loop inside hnswServeFrame runs under the online-
-          // serve regime; the landing write stays adaptive on purpose
-          // (AQE coalescing keeps each bid= dir one part file — r16)
-          val b = batch.withColumn("norm2",
-            expr("vector_dot_dec(embedding, embedding)"))
-          hnswServeFrame(spark, root, b, beamWidth = 32)
-            .write.mode("overwrite").parquet(s"$out/bid=$id")
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    streamBatches(spark, Streams.fresh("stream_index_hnsw_serve", dir),
+      Tables(spark, dir).embeddings.filter(col("vec_id") % 50 === 45)
+        .select(col("vec_id"), col("embedding"))) { (batch, id) =>
+      // the hop loop inside hnswServeFrame runs under the online-
+      // serve regime; the landing write stays adaptive on purpose
+      // (AQE coalescing keeps each bid= dir one part file — r16)
+      val b = batch.withColumn("norm2",
+        expr("vector_dot_dec(embedding, embedding)"))
+      hnswServeFrame(spark, root, b, beamWidth = 32)
+        .write.mode("overwrite").parquet(s"$out/bid=$id")
     }
     out
   }
@@ -2877,28 +2739,16 @@ object SimilarityQueries {
     val (rootF, _) = hierHnswIndexes(spark, dir)
     val out = indexRoot("hnswhierstreamserve", dir)
     graft.streaming.PartitionedStore.removeTree(new java.io.File(out))
-    val name = Streams.fresh("stream_index_hnsw_hier_serve", dir)
-    GraftQuery.withTinyStateStreaming(spark, 8) {
-      val src = Streams.stagedFileStream(spark,
-        Tables(spark, dir).embeddings
-          .filter(col("vec_id") % 50 === 45)
-          .select(col("vec_id"), col("embedding")),
-        name, files = 4, filesPerTrigger = 2)
-      val q = src.writeStream.queryName(name)
-        .option("checkpointLocation", Streams.ckpt(name))
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // entry descent + hop loop run under the online-serve
-          // regime; the landing write stays adaptive, as in
-          // streamHnswServedIndex (r16)
-          val b = batch.withColumn("norm2",
-            expr("vector_dot_dec(embedding, embedding)"))
-          hierHnswServe(spark, rootF, b, beamWidth = 32)
-            .write.mode("overwrite").parquet(s"$out/bid=$id")
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    streamBatches(spark, Streams.fresh("stream_index_hnsw_hier_serve", dir),
+      Tables(spark, dir).embeddings.filter(col("vec_id") % 50 === 45)
+        .select(col("vec_id"), col("embedding"))) { (batch, id) =>
+      // entry descent + hop loop run under the online-serve
+      // regime; the landing write stays adaptive, as in
+      // streamHnswServedIndex (r16)
+      val b = batch.withColumn("norm2",
+        expr("vector_dot_dec(embedding, embedding)"))
+      hierHnswServe(spark, rootF, b, beamWidth = 32)
+        .write.mode("overwrite").parquet(s"$out/bid=$id")
     }
     out
   }
@@ -2926,15 +2776,7 @@ object SimilarityQueries {
   final case class ServeMaintTrace(gensAtStart: Int, crashTouched: Int,
       stagingAfterCrash: Boolean, stagingAfterServe: Boolean)
 
-  /** Lazy holder for [[ServeMaintTrace]] memoization: putIfAbsent picks
-    * one winner and the lazy val's monitor makes losers wait for the
-    * winner's destructive build instead of racing it (ADVICE r12). */
-  private final class ServeMaintHolder(build: => ServeMaintTrace) {
-    lazy val trace: ServeMaintTrace = build
-  }
-
-  private val serveMaintTraceCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), ServeMaintHolder]
+  private val serveMaintTraceCache = Memo[Key, ServeMaintTrace]()
 
   /** One streaming serve pass over the serve-maint index: queries
     * vec_id%25=19 in 2 micro-batches; from the second trigger on, any
@@ -2951,37 +2793,26 @@ object SimilarityQueries {
     var stagingAfterServe = false
     val marker = new java.io.File(
       s"$root/cells/_graft_staging_delete/_graft_touched")
-    val name = Streams.fresh("stream_index_serve_maint", dir)
-    GraftQuery.withTinyStateStreaming(spark, 8) {
-      val src = Streams.stagedFileStream(spark,
-        Tables(spark, dir).embeddings
-          .filter(col("vec_id") % 25 === 19)
-          .select(col("vec_id"), col("embedding")),
-        name, files = 4, filesPerTrigger = 2)
-      val q = src.writeStream.queryName(name)
-        .option("checkpointLocation", Streams.ckpt(name))
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (id >= 1 && new java.io.File(s"$root/ingest").exists()) {
-            // maintenance commits between triggers and dies mid-swap
-            crashTouched = foldIngest(spark, root, crashAfterSwaps = 1).size
-            stagingAfterCrash = marker.exists()
-          }
-          val b = batch.withColumn("norm2",
-            expr("vector_dot_dec(embedding, embedding)"))
-          val all = readIndexCells(spark, root)
-          val cents = spark.read.parquet(s"$root/centroids")
-          val probes = b.join(assignToCentroids(b, cents), "vec_id")
-            .select(col("vec_id").as("query_id"), col("cent_id").as("cell"),
-              col("embedding").as("qemb"), col("norm2").as("qnorm2"))
-          probeServeFrames(spark, all, "cent_id", probes, "cos", 3)
-            .withColumnRenamed("score", "cos")
-            .write.mode("overwrite").parquet(s"$out/bid=$id")
-          if (id >= 1) stagingAfterServe |= marker.getParentFile.exists()
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    streamBatches(spark, Streams.fresh("stream_index_serve_maint", dir),
+      Tables(spark, dir).embeddings.filter(col("vec_id") % 25 === 19)
+        .select(col("vec_id"), col("embedding"))) { (batch, id) =>
+      if (id >= 1 && new java.io.File(s"$root/ingest").exists()) {
+        // maintenance commits between triggers and dies mid-swap
+        crashTouched =
+          foldIngest(spark, root, RawTier, crashAfterSwaps = 1).size
+        stagingAfterCrash = marker.exists()
+      }
+      val b = batch.withColumn("norm2",
+        expr("vector_dot_dec(embedding, embedding)"))
+      val all = readIndexCells(spark, root)
+      val cents = spark.read.parquet(s"$root/centroids")
+      val probes = b.join(assignToCentroids(b, cents), "vec_id")
+        .select(col("vec_id").as("query_id"), col("cent_id").as("cell"),
+          col("embedding").as("qemb"), col("norm2").as("qnorm2"))
+      probeServeFrames(spark, all, "cent_id", probes, "cos", 3)
+        .withColumnRenamed("score", "cos")
+        .write.mode("overwrite").parquet(s"$out/bid=$id")
+      if (id >= 1) stagingAfterServe |= marker.getParentFile.exists()
     }
     ServeMaintTrace(gens0, crashTouched, stagingAfterCrash, stagingAfterServe)
   }
@@ -2995,37 +2826,22 @@ object SimilarityQueries {
     * run's trace). */
   private[graft] def streamServeMaintIndex(spark: SparkSession,
       dir: String): (String, ServeMaintTrace) = {
-    import graft.streaming.PartitionedStore
     val root = indexRoot("ivfservemaint", dir)
     val out = indexRoot("ivfservemaintout", dir)
-    val key = (spark, dir)
-    // Single-computation memoization via a lazy holder (ADVICE r12: the
-    // old contains/put pair was non-atomic, so two concurrent first
-    // invocations could both take the destructive removeTree/copyTree/
-    // stream path against the same root). putIfAbsent decides ONE
-    // winner; the winner's lazy body runs the destructive build exactly
-    // once, losers block on the lazy (JVM lazy-val monitor) until the
-    // build lands and then take the steady-state re-serve path.
-    val holder = new ServeMaintHolder({
-      PartitionedStore.removeTree(new java.io.File(root))
-      PartitionedStore.removeTree(new java.io.File(out))
-      PartitionedStore.copyTree(
-        new java.io.File(streamUpsertedIvfIndex(spark, dir)),
-        new java.io.File(root))
-      val trace = runServeMaintStream(spark, dir, root, out)
-      foldIngest(spark, root) // post-stream maintenance retry converges
-      trace
-    })
-    serveMaintTraceCache.putIfAbsent(key, holder) match {
-      case None => (out, holder.trace)
-      case Some(h) =>
-        val t = h.trace
-        // steady-state invocations re-run the serve stream against the
-        // folded layout (steady-state timing — fold convergence never
-        // changes served rows, which is the gate's claim)
-        runServeMaintStream(spark, dir, root, out)
-        (out, t)
+    // the destructive build runs once per key (Memo, ADVICE r12); every
+    // other invocation — including one that waited on a concurrent
+    // build — re-runs the serve stream against the folded layout
+    var built = false
+    val trace = serveMaintTraceCache((spark, dir)) {
+      built = true
+      graft.streaming.PartitionedStore.removeTree(new java.io.File(out))
+      copyLayout(streamUpsertedIvfIndex(spark, dir), root)
+      val t = runServeMaintStream(spark, dir, root, out)
+      foldIngest(spark, root, RawTier) // post-stream retry converges
+      t
     }
+    if (!built) runServeMaintStream(spark, dir, root, out)
+    (out, trace)
   }
 
   // ---- PQ-encode-on-ingest (r11, judge item #5): the compressed tier
@@ -3043,15 +2859,14 @@ object SimilarityQueries {
   // same codebook — the gate's oracle states exactly that rebuild, and
   // the spec asserts code-level equality outright.
 
-  private val streamPqCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val streamPqCache = Memo[Key, String]()
 
   /** Memoized: base (vec_id < 9n/10) PQ index build — codebook trained
     * on base only, √n_base coarse cells — then streamed encoding of the
     * remaining 10% (2 micro-batches); returns the root. */
   private[graft] def streamPqIndex(spark: SparkSession,
       dir: String): String =
-    streamPqCache.getOrElseUpdate((spark, dir), {
+    streamPqCache((spark, dir)) {
       import graft.streaming.{PartitionedStore, Streams}
       val root = indexRoot("ivfpqstream", dir)
       PartitionedStore.removeTree(new java.io.File(root))
@@ -3073,66 +2888,30 @@ object SimilarityQueries {
       codesB.join(assignToCentroids(vb, cents), "vec_id")
         .write.mode("overwrite").partitionBy("cent_id")
         .parquet(s"$root/codes")
-      val name = Streams.fresh("stream_index_pq", dir)
-      GraftQuery.withTinyStateStreaming(spark, 8) {
-        val src = Streams.stagedFileStream(spark,
-          Tables(spark, dir).embeddings
-            .filter(col("vec_id") >= b)
-            .select(col("vec_id"), col("embedding")),
-          name, files = 4, filesPerTrigger = 2)
-        val q = src.writeStream.queryName(name)
-          .option("checkpointLocation", Streams.ckpt(name))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val bb = batch.withColumn("norm2",
-              expr("vector_dot_dec(embedding, embedding)"))
-            val (codesI, _) = pqCodesLuts(pqSlices(bb), cb)
-            codesI.join(assignToCentroids(bb, cents), "vec_id")
-              .write.mode("overwrite").partitionBy("cent_id")
-              .parquet(s"$root/codes_ingest/bid=$id")
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+      streamBatches(spark, Streams.fresh("stream_index_pq", dir),
+        Tables(spark, dir).embeddings.filter(col("vec_id") >= b)
+          .select(col("vec_id"), col("embedding"))) { (batch, id) =>
+        val bb = batch.withColumn("norm2",
+          expr("vector_dot_dec(embedding, embedding)"))
+        val (codesI, _) = pqCodesLuts(pqSlices(bb), cb)
+        codesI.join(assignToCentroids(bb, cents), "vec_id")
+          .write.mode("overwrite").partitionBy("cent_id")
+          .parquet(s"$root/codes_ingest/bid=$id")
       }
       root
-    })
+    }
 
   // ---- codes-tier fold + planner coverage (r12, closing the r11
   // judge's Missing #1): the streamed PQ layout lands codes under
   // codes_ingest/bid= with the same write-optimized→read-optimized
   // asymmetry the raw tier's fold closed in r10 — and the codes tier is
   // the one a billion-vector store actually SERVES from, so file decay
-  // there is the decay that matters. The fold is foldIngest verbatim on
-  // the (codes, codes_ingest) pair (the layouts share the vec_id-keyed,
-  // cent_id-partitioned shape), and the PLANNER observes the tier
-  // through the same signals (pending bid= generations, per-cell file
-  // counts) with the retrain dial off — re-clustering the coarse
-  // quantizer would invalidate every stored code, so a drifted codes
-  // tier is repaired by re-encoding against a retrained RAW tier, an
-  // external decision like deletes.
+  // there is the decay that matters. The fold and the planner are the
+  // raw tier's, run over [[CodesTier]] (the layouts share the
+  // vec_id-keyed, cent_id-partitioned shape) with the retrain dial off.
 
-  /** Execute a codes-tier plan: fold landed code generations, then
-    * compact over-bound code cells. Never retrains (see
-    * [[planMaintenance]]'s trackImbalance doc). */
-  private[graft] def runCodesMaintenance(spark: SparkSession,
-      root: String, plan: MaintenancePlan): Unit = {
-    if (plan.fold)
-      foldIngest(spark, root, cellsSub = "codes", ingestSub = "codes_ingest")
-    if (plan.compact) graft.streaming.PartitionedStore.compact(
-      spark, s"$root/codes", "cent_id", plan.maxFiles)
-    ()
-  }
-
-  /** Codes-tier planner read: pending codes_ingest generations +
-    * per-cell code-file counts; imbalance intentionally untracked. */
-  private[graft] def planCodesMaintenance(spark: SparkSession,
-      root: String): MaintenancePlan =
-    planMaintenance(spark, root, cellsSub = "codes",
-      ingestSub = "codes_ingest", trackImbalance = false)
-
-  private val foldPqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, MaintenancePlan, MaintenancePlan)]
+  private val foldPqCache =
+    Memo[Key, (String, MaintenancePlan, MaintenancePlan)]()
 
   /** Memoized: copy the streamed PQ index (pending codes_ingest bid=
     * generations), plan the codes tier, execute (fold + compact), and
@@ -3141,17 +2920,13 @@ object SimilarityQueries {
     * signals. */
   private[graft] def foldedPqIndex(spark: SparkSession,
       dir: String): (String, MaintenancePlan, MaintenancePlan) =
-    foldPqCache.getOrElseUpdate((spark, dir), {
-      import graft.streaming.PartitionedStore
+    foldPqCache((spark, dir)) {
       val root = indexRoot("ivfpqfold", dir)
-      PartitionedStore.removeTree(new java.io.File(root))
-      PartitionedStore.copyTree(
-        new java.io.File(streamPqIndex(spark, dir)),
-        new java.io.File(root))
-      val pre = planCodesMaintenance(spark, root)
-      runCodesMaintenance(spark, root, pre)
-      (root, pre, planCodesMaintenance(spark, root))
-    })
+      copyLayout(streamPqIndex(spark, dir), root)
+      val pre = planMaintenance(spark, root, CodesTier)
+      runMaintenance(spark, dir, root, pre)
+      (root, pre, planMaintenance(spark, root, CodesTier))
+    }
 
   // ---- persisted FILTERED ANN (r10, extending q_sim_filtered to the
   // across-job layout): the metadata-filter + similarity combination is
@@ -3163,15 +2938,14 @@ object SimilarityQueries {
   // tenant/language/date-partitioned vector store; the probed
   // (label, cell) pair list is driver metadata like every other serve.
 
-  private val filteredIvfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val filteredIvfCache = Memo[Key, String]()
 
   /** Memoized build of the (label, cent_id)-partitioned index: 16 seed
     * centroids (q_sim_filtered's discipline), every vector in its
     * (label, nearest-cell) partition. */
   private[graft] def filteredIvfIndex(spark: SparkSession,
       dir: String): String =
-    filteredIvfCache.getOrElseUpdate((spark, dir), {
+    filteredIvfCache((spark, dir)) {
       val root = indexRoot("ivffiltered", dir)
       val v = vectors(spark, dir)
       v.filter(col("vec_id") < 16)
@@ -3183,27 +2957,7 @@ object SimilarityQueries {
         .write.mode("overwrite").partitionBy("label", "cent_id")
         .parquet(s"$root/cells")
       root
-    })
-
-  /** Per-label batched partition prune over probed (label, cell) pairs
-    * (r10 judge item #6): ONE `label = l AND cent_id IN (cells_of_l)`
-    * disjunct per distinct label, so plan size is O(labels) — constant
-    * in query-batch size — where the old OR-chain over raw pairs grew
-    * linearly with the batch. Covers EXACTLY the input pair set (each
-    * label's IN list is that label's own probed cells); the (label,
-    * cell) equi-join on the serve keeps candidate matching exact
-    * regardless of predicate shape. Spec pins the disjunct count =
-    * distinct labels (the plan-text rendering truncates IN lists, so
-    * the shape is pinned on the predicate itself). */
-  private[graft] def labelBatchedPrune(pairs: Seq[(Any, Any)]): Column =
-    // an empty probe set prunes everything (ADVICE r11: a corpus slice
-    // with no queries must serve an empty result, not throw on the
-    // empty reduce — deleteKeys' touched.isEmpty guard, mirrored)
-    if (pairs.isEmpty) lit(false)
-    else pairs.groupBy(_._1).toSeq.sortBy(_._1.toString)
-      .map { case (l, rs) =>
-        col("label") === lit(l) && col("cent_id").isin(rs.map(_._2): _*)
-      }.reduce(_ || _)
+    }
 
   /** Two-level pruned same-label probe serve over a (label, cent_id)
     * layout rooted at `root` (queries = the layout's vec_id%50=30
@@ -3221,9 +2975,12 @@ object SimilarityQueries {
         col("cent_id").as("cell"), col("embedding").as("qemb"),
         col("norm2").as("qnorm2"))
     // probed (label, cell) pairs: driver metadata, ≤ labels×cells values
+    // — pruned with one `label = l AND cent_id IN (cells_of_l)` disjunct
+    // per label, so plan size is O(labels), constant in batch size
     val pairs = q.select(col("qlabel"), col("cell")).distinct().collect()
     val cells = spark.read.parquet(s"$root/cells")
-      .filter(labelBatchedPrune(pairs.map(r => (r.get(0), r.get(1)))))
+      .filter(graft.streaming.PartitionedStore.pruneExpr(
+        FilteredTier.keys, pairs.map(r => Seq(r.get(0), r.get(1)))))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
     broadcast(q).as("q")
@@ -3310,121 +3067,13 @@ object SimilarityQueries {
   // (label, cent_id) two-level layout was the one persisted store still
   // maintained by hand — delete propagation existed (deletedIvfIndexes)
   // but it had no landing scheme, no planner signals, and no
-  // fold/compact of its own. Same discipline as the raw/codes/graph
-  // tiers: write-optimized bid= landing dirs partitioned by the SAME
-  // two-level scheme, planner signals read from the layout's own
-  // on-disk state (pending generations, per-LEAF file counts,
-  // per-LABEL imbalance), repairs through the shared staged-swap
-  // machinery. Retrain is structurally off like the codes tier: the 16
-  // seed centroids are shared across every label's partitions, so
-  // re-seeding would invalidate the cell level of every row's
-  // two-level address — a drifted filtered layout is re-derived from a
-  // retrained raw tier, an external decision like deletes.
+  // fold/compact of its own. It is now [[FilteredTier]]: write-optimized
+  // bid= landing dirs partitioned by the SAME two-level scheme, and the
+  // raw tier's fold, planner (per-LEAF file counts, per-LABEL
+  // imbalance) and executor, with retrain structurally off.
 
-  /** The filtered layout's signals + implied decisions. `overBound`
-    * keys are (label, cent_id) dir-name tuples; `labelImbalance` is the
-    * per-label max_cell·n_cells/n_rows factor (observability only —
-    * never a planner action here, see the block comment). */
-  final case class FilteredMaintenancePlan(pendingGens: Int,
-      overBound: Seq[Seq[String]], labelImbalance: Map[String, Double],
-      maxFiles: Int) {
-    def fold: Boolean = pendingGens > 0
-    def compact: Boolean = overBound.nonEmpty
-    def maxImbalance: Double =
-      if (labelImbalance.isEmpty) 0.0 else labelImbalance.values.max
-    def actions: Seq[String] =
-      Seq("fold" -> fold, "compact" -> compact)
-        .collect { case (a, true) => a }
-  }
-
-  /** Read the (label, cent_id) layout's maintenance signals: pending
-    * bid= generations and per-leaf file counts from the directory
-    * layout (driver metadata, ≤ labels×cells tuples), per-label
-    * imbalance from one aggregation over cells ∪ landed ingest. Empty/
-    * missing layouts read healthy (the planMaintenance contract). */
-  private[graft] def planFilteredMaintenance(spark: SparkSession,
-      root: String,
-      maxFiles: Int = PLANNER_MAX_FILES): FilteredMaintenancePlan = {
-    import graft.streaming.PartitionedStore
-    val gens = Option(new java.io.File(s"$root/ingest").listFiles())
-      .toSeq.flatten
-      .count(f => f.isDirectory && f.getName.startsWith("bid="))
-    val cellsPath = s"$root/cells"
-    val counts =
-      if (!PartitionedStore.exists(cellsPath)) Map.empty[Seq[String], Int]
-      else PartitionedStore.partFileCounts(cellsPath, Seq("label", "cent_id"))
-    val over = counts.filter(_._2 > maxFiles).keys.toSeq
-      .sortBy(_.mkString("/"))
-    val imb: Map[String, Double] =
-      if (counts.values.sum == 0) Map.empty
-      else {
-        val live = spark.read.parquet(cellsPath)
-          .select(col("vec_id"), col("label"), col("cent_id"))
-        val all = if (gens > 0)
-          live.unionByName(spark.read.parquet(s"$root/ingest").drop("bid")
-            .select(col("vec_id"), col("label"), col("cent_id")))
-        else live
-        all.groupBy(col("label"), col("cent_id")).agg(count(lit(1)).as("n"))
-          .groupBy(col("label")).agg(count(lit(1)).as("c"),
-            sum(col("n")).as("rows"), max(col("n")).as("mx"))
-          .collect().map { r =>
-            r.get(0).toString -> (if (r.getLong(2) == 0L) 0.0
-              else r.getLong(3).toDouble * r.getLong(1) / r.getLong(2))
-          }.toMap
-      }
-    FilteredMaintenancePlan(gens, over, imb, maxFiles)
-  }
-
-  /** Fold the filtered layout's landed bid= generations into the
-    * (label, cent_id) base leaves — foldIngest's exact discipline one
-    * partition level deeper: touched (label, cell) pairs are driver
-    * metadata from the landed rows, the live read prunes to exactly
-    * those leaves (labelBatchedPrune — O(labels) plan), keyed LWW dedup
-    * by vec_id, staged multi-level swap, landed dirs removed last.
-    * Crash anywhere → the next fold completes the committed swaps and
-    * re-merges idempotently. Returns the touched pairs. */
-  private[graft] def foldFilteredIngest(spark: SparkSession, root: String,
-      crashAfterSwaps: Int = Int.MaxValue): Seq[(Any, Any)] = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.streaming.PartitionedStore
-    val ingestDir = new java.io.File(s"$root/ingest")
-    PartitionedStore.recoverPendingDelete(s"$root/cells")
-    if (!ingestDir.exists()) return Seq.empty
-    val ingest = spark.read.parquet(s"$root/ingest").drop("bid")
-    val touched = ingest.select(col("label"), col("cent_id")).distinct()
-      .collect().map(r => (r.get(0), r.get(1))).toSeq
-    if (touched.nonEmpty) {
-      val live = spark.read.parquet(s"$root/cells")
-        .filter(labelBatchedPrune(touched))
-      val byVec = Window.partitionBy(col("vec_id"))
-        .orderBy(col("label"), col("cent_id"))
-      val merged = Scratch.checkpoint(
-        live.unionByName(ingest)
-          .withColumn("rn", row_number().over(byVec))
-          .filter(col("rn") === 1).drop("rn")
-          .repartition(col("label"), col("cent_id")))
-      PartitionedStore.replacePartitions(spark, s"$root/cells",
-        Seq("label", "cent_id"), merged,
-        touched.map(t => Seq(t._1, t._2)), crashAfterSwaps)
-      if (crashAfterSwaps < touched.size) return touched
-    }
-    PartitionedStore.removeTree(ingestDir)
-    touched
-  }
-
-  /** Execute the filtered layout's planned repairs: fold first, then
-    * the two-level compact — the raw tier's dependency order. */
-  private[graft] def runFilteredMaintenance(spark: SparkSession,
-      root: String, plan: FilteredMaintenancePlan): Unit = {
-    if (plan.fold) foldFilteredIngest(spark, root)
-    if (plan.compact) graft.streaming.PartitionedStore.compact(
-      spark, s"$root/cells", Seq("label", "cent_id"), plan.maxFiles)
-    ()
-  }
-
-  private val filteredPlannerCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (String, FilteredMaintenancePlan, FilteredMaintenancePlan)]
+  private val filteredPlannerCache =
+    Memo[Key, (String, MaintenancePlan, MaintenancePlan)]()
 
   /** Apply the filtered-planner scenario's wear to a fresh copy of the
     * (label, cent_id) layout at `root` — three ways: a staged-swap
@@ -3438,14 +3087,10 @@ object SimilarityQueries {
   private[graft] def wearFilteredLayout(spark: SparkSession, dir: String,
       root: String): Unit = {
     import graft.streaming.PartitionedStore
-    PartitionedStore.removeTree(new java.io.File(root))
-    PartitionedStore.copyTree(
-      new java.io.File(filteredIvfIndex(spark, dir)),
-      new java.io.File(root))
+    copyLayout(filteredIvfIndex(spark, dir), root)
     val cents = spark.read.parquet(s"$root/centroids")
     val del = vectors(spark, dir).filter(delPredicate)
-    PartitionedStore.deleteKeys(spark, s"$root/cells",
-      Seq("label", "cent_id"),
+    PartitionedStore.deleteKeys(spark, s"$root/cells", FilteredTier.keys,
       del.select(col("vec_id"), col("label"))
         .join(assignToCentroids(del, cents), "vec_id"),
       Seq("vec_id"), Int.MaxValue)
@@ -3460,30 +3105,31 @@ object SimilarityQueries {
       .select(col("label"), col("cent_id")).distinct()
       .collect().map(r => (r.get(0).toString, r.get(1).toString)).toSet
     val splitPairs = PartitionedStore
-      .partFileCounts(s"$root/cells", Seq("label", "cent_id"))
+      .partFileCounts(s"$root/cells", FilteredTier.keys)
       .keys.filter(t => !touchedByIngest.contains((t(0), t(1))))
       .toSeq.sortBy(_.mkString("/")).take(3)
-      .map(t => (t(0).toLong: Any, t(1).toLong: Any))
+      .map(_.map(_.toLong: Any))
     if (splitPairs.nonEmpty) {
       PartitionedStore.replacePartitions(spark, s"$root/cells",
-        Seq("label", "cent_id"),
+        FilteredTier.keys,
         spark.read.parquet(s"$root/cells")
-          .filter(labelBatchedPrune(splitPairs)).repartition(2),
-        splitPairs.map(p => Seq(p._1, p._2)), Int.MaxValue)
+          .filter(PartitionedStore.pruneExpr(FilteredTier.keys, splitPairs))
+          .repartition(2),
+        splitPairs, Int.MaxValue)
     }
   }
 
   /** Memoized filtered-planner scenario: wear ([[wearFilteredLayout]])
     * → plan → execute → re-plan. */
   private[graft] def plannedFilteredIndex(spark: SparkSession, dir: String)
-      : (String, FilteredMaintenancePlan, FilteredMaintenancePlan) =
-    filteredPlannerCache.getOrElseUpdate((spark, dir), {
+      : (String, MaintenancePlan, MaintenancePlan) =
+    filteredPlannerCache((spark, dir)) {
       val root = indexRoot("ivffilteredplanner", dir)
       wearFilteredLayout(spark, dir, root)
-      val pre = planFilteredMaintenance(spark, root)
-      runFilteredMaintenance(spark, root, pre)
-      (root, pre, planFilteredMaintenance(spark, root))
-    })
+      val pre = planMaintenance(spark, root, FilteredTier)
+      runMaintenance(spark, dir, root, pre)
+      (root, pre, planMaintenance(spark, root, FilteredTier))
+    }
 
   // ---- persisted COMPRESSED index (r10 extension): every raw layout
   // above persists the full embedding per row (~4·d bytes); the tier a
@@ -3499,8 +3145,7 @@ object SimilarityQueries {
   // the compression contract itself — the codes files carry NO
   // embedding column.
 
-  private val pqIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val pqIndexCache = Memo[Key, String]()
 
   /** Memoized: build + write the compressed (IVF √n-cell + PQ 8×8)
     * index layout once; returns its root. The codes are derived from
@@ -3508,15 +3153,10 @@ object SimilarityQueries {
     * layout is exactly what a restarted job would reconstruct. */
   private[graft] def persistedPqIndex(spark: SparkSession,
       dir: String): String =
-    pqIndexCache.getOrElseUpdate((spark, dir), {
+    pqIndexCache((spark, dir)) {
       val root = indexRoot("ivfpqindex", dir)
       val v = vectors(spark, dir)
-      val nn = v.agg(count(lit(1)).as("n"))
-      v.crossJoin(broadcast(nn))
-        .filter(col("vec_id") < ceil(sqrt(col("n"))).cast("long"))
-        .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"),
-          col("norm2").as("cnorm2"))
-        .write.mode("overwrite").parquet(s"$root/centroids")
+      sqrtCentroids(v).write.mode("overwrite").parquet(s"$root/centroids")
       val sub2 = Scratch.checkpointLazy(pqSlices(v))
       pqTrain(sub2).write.mode("overwrite").parquet(s"$root/codebook")
       val cb = spark.read.parquet(s"$root/codebook")
@@ -3525,7 +3165,7 @@ object SimilarityQueries {
         .write.mode("overwrite").partitionBy("cent_id")
         .parquet(s"$root/codes")
       root
-    })
+    }
 
   /** Serve a query batch (raw vectors, vec_id%50=0) from a persisted
     * IVFPQ layout rooted at `root`: LUTs against the persisted codebook,
@@ -3606,8 +3246,11 @@ object SimilarityQueries {
   // scaled-long exact discipline throughout, so the gate's round-state
   // (per-cell before/after/arrived/departed counts) is engine-exact.
 
-  private val retrainCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, DataFrame, DataFrame)]
+  private val retrainCache =
+      Memo.withRelease[Key, (String, DataFrame, DataFrame)] {
+    case (_, asg0, asg1) =>
+      asg0.unpersist(blocking = false); asg1.unpersist(blocking = false); ()
+  }
 
   /** One warm-start round over the (copied) upserted index at `root`:
     * rewrites changed cells in place, writes centroids_v2, and returns
@@ -3677,10 +3320,10 @@ object SimilarityQueries {
       // reads only the cached corpus and the localCheckpoint'd asg1,
       // never the cells being swapped.
       graft.streaming.PartitionedStore.replacePartitions(
-        spark, s"$root/cells", "cent_id",
+        spark, s"$root/cells", Seq("cent_id"),
         v.join(asg1, "vec_id").filter(col("cent_id").isin(changed: _*))
           .repartition(col("cent_id")),
-        changed)
+        changed.map(Seq(_)), Int.MaxValue)
     }
     c1.write.mode("overwrite").parquet(s"$root/centroids_v2")
     (asg0, asg1, changed)
@@ -3690,15 +3333,12 @@ object SimilarityQueries {
     * (root, asg0, asg1). */
   private[graft] def retrainedIvfIndex(spark: SparkSession,
       dir: String): (String, DataFrame, DataFrame) =
-    retrainCache.getOrElseUpdate((spark, dir), {
-      import graft.streaming.PartitionedStore
+    retrainCache((spark, dir)) {
       val root = indexRoot("ivfretrain", dir)
-      PartitionedStore.copyTree(
-        new java.io.File(upsertedIvfIndex(spark, dir)),
-        new java.io.File(root))
+      copyLayout(upsertedIvfIndex(spark, dir), root)
       val (asg0, asg1, _) = warmStartRetrain(spark, dir, root)
       (root, asg0, asg1)
-    })
+    }
 
   // ---- multi-round warm-start retrain (r11, judge item #7): one
   // seeded Lloyd round repairs the worst drift, but convergence takes
@@ -3719,21 +3359,16 @@ object SimilarityQueries {
 
   private[graft] val RETRAIN_MAX_ROUNDS = 3
 
-  private val retrain2Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, Seq[(Int, Long, Long)])]
+  private val retrain2Cache = Memo[Key, (String, Seq[(Int, Long, Long)])]()
 
   /** Memoized: copy the upserted index, run warm-start rounds to the
     * membership fixed point (capped at [[RETRAIN_MAX_ROUNDS]]); returns
     * (root, per-executed-round (round, n_moved, n_changed_cells)). */
   private[graft] def multiRoundRetrainedIndex(spark: SparkSession,
       dir: String): (String, Seq[(Int, Long, Long)]) =
-    retrain2Cache.getOrElseUpdate((spark, dir), {
-      import graft.streaming.PartitionedStore
+    retrain2Cache((spark, dir)) {
       val root = indexRoot("ivfretrain2", dir)
-      PartitionedStore.removeTree(new java.io.File(root))
-      PartitionedStore.copyTree(
-        new java.io.File(upsertedIvfIndex(spark, dir)),
-        new java.io.File(root))
+      copyLayout(upsertedIvfIndex(spark, dir), root)
       val rows = Seq.newBuilder[(Int, Long, Long)]
       var r = 1
       var go = true
@@ -3746,7 +3381,7 @@ object SimilarityQueries {
         r += 1
       }
       (root, rows.result())
-    })
+    }
 
   /** Oracle chain for the multi-round retrain: the stored upsert-layout
     * assignment `wasg0`, then per round r the seeded mean update
@@ -3826,8 +3461,7 @@ object SimilarityQueries {
   // IndexMaintenanceSpec restarts the stream from its checkpoint
   // mid-corpus and redelivers a landed batch: zero duplicates either way.
 
-  private val streamUpsertCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val streamUpsertCache = Memo[Key, String]()
 
   /** Idempotent landing of one ingest micro-batch (vec_id, label,
     * embedding): exact-norm projection, frozen-centroid assignment,
@@ -3854,32 +3488,21 @@ object SimilarityQueries {
     * the root. */
   private[graft] def streamUpsertedIvfIndex(spark: SparkSession,
       dir: String): String =
-    streamUpsertCache.getOrElseUpdate((spark, dir), {
+    streamUpsertCache((spark, dir)) {
       import graft.streaming.Streams
       val root = indexRoot("ivfstreamupsert", dir)
-      // seedFromIvfBase clears the whole root first — stale
+      // copyLayout clears the whole root first — stale
       // $root/ingest/bid= dirs from a crashed same-pid predecessor
       // would otherwise be unioned into the serve (ADVICE r10)
-      seedFromIvfBase(spark, dir, root)
+      copyLayout(baseIvfLayout(spark, dir), root)
       val cents = spark.read.parquet(s"$root/centroids")
-      val name = Streams.fresh("stream_index_upsert", dir)
-      GraftQuery.withTinyStateStreaming(spark, 8) {
-        val src = Streams.stagedFileStream(spark,
-          Tables(spark, dir).embeddings
-            .filter(col("vec_id") % 10 === 9)
-            .select(col("vec_id"), col("label"), col("embedding")),
-          name, files = 4, filesPerTrigger = 2)
-        val q = src.writeStream.queryName(name)
-          .option("checkpointLocation", Streams.ckpt(name))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            landIngestBatch(batch, id, root, cents); ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+      streamBatches(spark, Streams.fresh("stream_index_upsert", dir),
+        Tables(spark, dir).embeddings.filter(col("vec_id") % 10 === 9)
+          .select(col("vec_id"), col("label"), col("embedding"))) {
+        (batch, id) => landIngestBatch(batch, id, root, cents)
       }
       root
-    })
+    }
 
   // ---- Lloyd's k-means (r9): the TRAINING side of IVF — every cell
   // gate seeds centroids from the first vectors (the honest gate-sized
@@ -4022,15 +3645,14 @@ object SimilarityQueries {
   // a real vector store runs, assembled from this file's own gated
   // pieces (q_sim_kmeans ∘ q_sim_index_persisted's layout discipline).
 
-  private val trainedIvfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val trainedIvfCache = Memo[Key, String]()
 
   /** Train → persist: cells = assignment of every vector to the FINAL
     * trained centroids, written hive-partitioned by cell; the trained
     * centroid table lands beside it. Memoized per (session, dir). */
   private[graft] def trainedIvfIndex(spark: SparkSession,
       dir: String): String =
-    trainedIvfCache.getOrElseUpdate((spark, dir), {
+    trainedIvfCache((spark, dir)) {
       val root = indexRoot("ivftrained", dir)
       val (cent, _, _) = kmeansRounds(spark, dir, withInertia = false)
       cent.write.mode("overwrite").parquet(s"$root/centroids")
@@ -4040,7 +3662,7 @@ object SimilarityQueries {
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$root/cells")
       root
-    })
+    }
 
   // ---- delete propagation into the persisted ANN layouts (r10, judge
   // item #1): SnapshotStore.deleteKeys is the right-to-be-forgotten path
@@ -4064,8 +3686,7 @@ object SimilarityQueries {
   // The gates operate on a COPY of the shared layouts (deleting from the
   // memoized originals would corrupt the sibling serve gates).
 
-  private val deletedIvfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val deletedIvfCache = Memo[Key, String]()
 
   /** Deleted-vector predicate for the delete gate: 10% of the corpus,
     * disjoint from every serve gate's query set (%50=0 → %10=0,
@@ -4087,47 +3708,39 @@ object SimilarityQueries {
     * edited: they are model parameters (aggregates), not records. */
   private[graft] def deletedIvfIndexes(spark: SparkSession,
       dir: String): String =
-    deletedIvfCache.getOrElseUpdate((spark, dir), {
+    deletedIvfCache((spark, dir)) {
       import graft.streaming.PartitionedStore
       val root = indexRoot("ivfdeleted", dir)
-      PartitionedStore.copyTree(
-        new java.io.File(persistedIvfIndex(spark, dir)),
-        new java.io.File(s"$root/sqrt"))
-      PartitionedStore.copyTree(
-        new java.io.File(trainedIvfIndex(spark, dir)),
-        new java.io.File(s"$root/trained"))
-      PartitionedStore.copyTree(
-        new java.io.File(persistedPqIndex(spark, dir)),
-        new java.io.File(s"$root/pq"))
-      PartitionedStore.copyTree(
-        new java.io.File(filteredIvfIndex(spark, dir)),
-        new java.io.File(s"$root/filtered"))
+      copyLayout(persistedIvfIndex(spark, dir), s"$root/sqrt")
+      copyLayout(trainedIvfIndex(spark, dir), s"$root/trained")
+      copyLayout(persistedPqIndex(spark, dir), s"$root/pq")
+      copyLayout(filteredIvfIndex(spark, dir), s"$root/filtered")
       val del = vectors(spark, dir).filter(delPredicate)
       // touched cells from the delete set's own assignment — O(deleted×C),
       // never an index scan
       val pcents = spark.read.parquet(s"$root/sqrt/centroids")
-      PartitionedStore.deleteKeys(spark, s"$root/sqrt/cells", "cent_id",
-        assignToCentroids(del, pcents), Seq("vec_id"))
+      PartitionedStore.deleteKeys(spark, s"$root/sqrt/cells", Seq("cent_id"),
+        assignToCentroids(del, pcents), Seq("vec_id"), Int.MaxValue)
       val tcents = spark.read.parquet(s"$root/trained/centroids")
-      PartitionedStore.deleteKeys(spark, s"$root/trained/cells", "cell",
+      PartitionedStore.deleteKeys(spark, s"$root/trained/cells", Seq("cell"),
         l2Assign(vecDims(del), tcents)
           .select(col("vec_id"), col("k").as("cell")),
-        Seq("vec_id"))
+        Seq("vec_id"), Int.MaxValue)
       // PQ codes layout: same √n coarse assignment the codes were
       // written under (the pq root persists its own centroids table)
       val qcents = spark.read.parquet(s"$root/pq/centroids")
-      PartitionedStore.deleteKeys(spark, s"$root/pq/codes", "cent_id",
-        assignToCentroids(del, qcents), Seq("vec_id"))
+      PartitionedStore.deleteKeys(spark, s"$root/pq/codes", Seq("cent_id"),
+        assignToCentroids(del, qcents), Seq("vec_id"), Int.MaxValue)
       // filtered layout: (label, cent_id) resolved from the delete
       // set's own labels + its assignment against the 16 seed centroids
       val fcents = spark.read.parquet(s"$root/filtered/centroids")
       PartitionedStore.deleteKeys(spark, s"$root/filtered/cells",
-        Seq("label", "cent_id"),
+        FilteredTier.keys,
         del.select(col("vec_id"), col("label"))
           .join(assignToCentroids(del, fcents), "vec_id"),
         Seq("vec_id"), Int.MaxValue)
       root
-    })
+    }
 
   /** Route external queries through a trained centroid table (k, dim,
     * c): exact squared-L2 score against all K centroids (broadcast
@@ -4725,7 +4338,7 @@ object SimilarityQueries {
       // both join sides read one materialization); int8 values held as
       // exact floats so the native vector_dot computes the int dot in
       // its primitive loop
-      val q8 = q8Cache.getOrElseUpdate((spark, dir), {
+      val q8 = q8Cache((spark, dir)) {
         val emb = Tables(spark, dir).embeddings
         val mx = emb.agg(
           max(array_max(transform(col("embedding"),
@@ -4737,7 +4350,7 @@ object SimilarityQueries {
                 .cast("float")).as("qe"))
           .repartition(spark.sparkContext.defaultParallelism)
           .localCheckpoint()
-      })
+      }
       val qs = q8.filter(col("vec_id") % 37 === 0 && col("vec_id") < 2000)
         .select(col("vec_id").as("q_id"), col("qe").as("qq"))
       val scored = broadcast(qs)
@@ -5821,7 +5434,7 @@ object SimilarityQueries {
         allCodes, col("vec_id") % 50 === 35)
     },
 
-    // ---- codes-tier fold (see the runCodesMaintenance block): the
+    // ---- codes-tier fold (see the CodesTier block): the
     // planner reads the compressed layout's own wear (pending
     // codes_ingest bid= generations), the fold staged-swaps them into
     // the base codes cells, and the serve reads codes ALONE —
@@ -6430,7 +6043,7 @@ object SimilarityQueries {
       filteredLayoutServe(spark, filteredIvfIndex(spark, dir))
     },
 
-    // ---- filtered-layout planner (see the planFilteredMaintenance
+    // ---- filtered-layout planner (see the FilteredTier
     // block, r12 judge item #3): the two-level layout accumulates real
     // wear — a staged-swap delete (vec_id%10=3), the deleted slice
     // re-arriving as two landed bid= generations, and multi-file leaves
@@ -7267,43 +6880,33 @@ object SimilarityQueries {
       import graft.streaming.Streams
       val name = Streams.fresh("stream_embed", dir)
       val root = s"${Streams.scratchRoot}/embed/$name"
-      GraftQuery.withTinyStateStreaming(spark, 8) {
-        val c = vectors(spark, dir).filter(col("vec_id") < 16).select(
-          col("vec_id").as("cent_id"), col("embedding").as("cemb"),
-          col("norm2").as("cnorm2"))
-        val src = Streams.stagedFileStream(spark,
-          Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding")),
-          name, files = 4, filesPerTrigger = 2)
-        val byVec = Window.partitionBy(col("vec_id"))
-          .orderBy(col("cos_c").desc, col("cent_id"))
-        val q = src.writeStream
-          .queryName(name)
-          .option("checkpointLocation", Streams.ckpt(name))
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            // partials for THIS batch id only; mode=overwrite makes a
-            // replayed id rewrite (not double-count) its contribution
-            batch
-              .withColumn("norm2", expr("vector_dot_dec(embedding, embedding)"))
-              .crossJoin(broadcast(c))
-              .select(col("vec_id"), col("cent_id"),
-                cosExact("embedding", "cemb",
-                  sqrt(col("norm2") * col("cnorm2"))).as("cos_c"))
-              .withColumn("rn", row_number().over(byVec))
-              .filter(col("rn") === 1)
-              .groupBy(col("cent_id"))
-              .agg(count(lit(1)).as("n_vectors"), sum(col("vec_id")).as("sum_vec_id"))
-              .write.mode("overwrite").parquet(s"$root/batch_id=$id")
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
-        // serve-time roll-up across batch partials (16 rows × n_batches)
-        spark.read.parquet(root)
-          .groupBy(col("cent_id"))
-          .agg(sum(col("n_vectors")).cast("long").as("n_vectors"),
-            sum(col("sum_vec_id")).cast("long").as("sum_vec_id"))
+      val c = vectors(spark, dir).filter(col("vec_id") < 16).select(
+        col("vec_id").as("cent_id"), col("embedding").as("cemb"),
+        col("norm2").as("cnorm2"))
+      val byVec = Window.partitionBy(col("vec_id"))
+        .orderBy(col("cos_c").desc, col("cent_id"))
+      streamBatches(spark, name,
+        Tables(spark, dir).embeddings.select(col("vec_id"), col("embedding"))) {
+        (batch, id) =>
+          // partials for THIS batch id only; mode=overwrite makes a
+          // replayed id rewrite (not double-count) its contribution
+          batch
+            .withColumn("norm2", expr("vector_dot_dec(embedding, embedding)"))
+            .crossJoin(broadcast(c))
+            .select(col("vec_id"), col("cent_id"),
+              cosExact("embedding", "cemb",
+                sqrt(col("norm2") * col("cnorm2"))).as("cos_c"))
+            .withColumn("rn", row_number().over(byVec))
+            .filter(col("rn") === 1)
+            .groupBy(col("cent_id"))
+            .agg(count(lit(1)).as("n_vectors"), sum(col("vec_id")).as("sum_vec_id"))
+            .write.mode("overwrite").parquet(s"$root/batch_id=$id")
       }
+      // serve-time roll-up across batch partials (16 rows × n_batches)
+      spark.read.parquet(root)
+        .groupBy(col("cent_id"))
+        .agg(sum(col("n_vectors")).cast("long").as("n_vectors"),
+          sum(col("sum_vec_id")).cast("long").as("sum_vec_id"))
     }
   )
 }

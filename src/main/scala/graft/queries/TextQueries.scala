@@ -187,19 +187,19 @@ object TextQueries {
   /** Memoized multi-level training result per (session, dir):
     * (vocab frame (w, wc, toks) after N rounds — localCheckpoint-backed,
     * tiny; merge list (round, x, y, cnt) — driver-side metadata). */
-  private val bpeMultiCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      (DataFrame, Seq[(Int, String, String, Long)])]
+  private val bpeMultiCache = Memo.withRelease[(org.apache.spark.sql.SparkSession, String),
+      (DataFrame, Seq[(Int, String, String, Long)])](
+      _._1.unpersist(blocking = false))
 
   private[graft] def bpeMultiTrain(
       spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, Seq[(Int, String, String, Long)]) =
-    bpeMultiCache.getOrElseUpdate((spark, dir), {
+    bpeMultiCache((spark, dir)) {
       val wcnt = Tables(spark, dir).documents
         .select(explode(words(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("wc"))
       bpeTrainLoop(wcnt)
-    })
+    }
 
   /** The N-round training loop over a (w, wc) vocabulary frame — shared
     * by the full-corpus trainer and the train-split trainer of the
@@ -298,15 +298,9 @@ object TextQueries {
   }
 
   /** Drop the memoized multi-level BPE state (long-lived sessions). */
-  def clearBpeMultiCache(): Unit = {
-    bpeMultiCache.values.foreach(_._1.unpersist(blocking = false))
-    bpeMultiCache.clear()
-    bpeSplitCache.values.foreach(_._1.unpersist(blocking = false))
-    bpeSplitCache.clear()
-    bpeBatchCache.values.foreach(_._1.unpersist(blocking = false))
-    bpeBatchCache.clear()
-    clearBpeIncrCache()
-  }
+  def clearBpeMultiCache(): Unit =
+    Seq(bpeMultiCache, bpeSplitCache, bpeBatchCache, bpeIncrCache)
+      .foreach(_.clear())
 
   /** Per-doc multi-level BPE accounting, same contract as
     * [[bpeDocTokens]] but denominated in the N-round vocabulary. */
@@ -417,20 +411,20 @@ object TextQueries {
 
   /** Memoized train-split (doc_id % 4 <> 0) trainer state, keyed like
     * [[bpeMultiCache]]. */
-  private val bpeSplitCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      (DataFrame, Seq[(Int, String, String, Long)])]
+  private val bpeSplitCache = Memo.withRelease[(org.apache.spark.sql.SparkSession, String),
+      (DataFrame, Seq[(Int, String, String, Long)])](
+      _._1.unpersist(blocking = false))
 
   private[graft] def bpeSplitTrain(
       spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, Seq[(Int, String, String, Long)]) =
-    bpeSplitCache.getOrElseUpdate((spark, dir), {
+    bpeSplitCache((spark, dir)) {
       val wcnt = Tables(spark, dir).documents
         .filter(col("doc_id") % 4 =!= 0)
         .select(explode(words(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("wc"))
       bpeTrainLoop(wcnt)
-    })
+    }
 
   /** One merge pass: left-to-right, replace adjacent (x, y) with x||y —
     * byte-equivalent to the trainer's `aggregate` fold (a just-merged
@@ -517,9 +511,9 @@ object TextQueries {
 
   /** Memoized batched-trainer state: (final vocab frame (w, wc, toks),
     * accepted merges (super_round, sel_rank, x, y, cnt)). */
-  private val bpeBatchCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      (DataFrame, Seq[(Int, Int, String, String, Long)])]
+  private val bpeBatchCache = Memo.withRelease[(org.apache.spark.sql.SparkSession, String),
+      (DataFrame, Seq[(Int, Int, String, String, Long)])](
+      _._1.unpersist(blocking = false))
 
   /** Adjacent-pair statistics (x, y, cnt) of a (wc, toks) vocabulary
     * frame — ONE distributed aggregation; the guard keeps single-token
@@ -573,7 +567,7 @@ object TextQueries {
   private[graft] def bpeBatchTrain(
       spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, Seq[(Int, Int, String, String, Long)]) =
-    bpeBatchCache.getOrElseUpdate((spark, dir), {
+    bpeBatchCache((spark, dir)) {
       val wcnt = Tables(spark, dir).documents
         .select(explode(words(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("wc"))
@@ -594,7 +588,7 @@ object TextQueries {
         }
       }
       (seqs, merges.result())
-    })
+    }
 
   // ===== incremental BPE pair statistics (r10, judge item #4) =============
   //
@@ -635,14 +629,14 @@ object TextQueries {
   /** Memoized incremental-trainer state: (final vocab frame, accepted
     * merges (super_round, sel_rank, x, y, cnt), per-round
     * (affected words, vocabulary size)). */
-  private val bpeIncrCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      (DataFrame, Seq[(Int, Int, String, String, Long)], Seq[(Long, Long)])]
+  private val bpeIncrCache = Memo.withRelease[(org.apache.spark.sql.SparkSession, String),
+      (DataFrame, Seq[(Int, Int, String, String, Long)], Seq[(Long, Long)])](
+      _._1.unpersist(blocking = false))
 
   private[graft] def bpeIncrTrain(
       spark: org.apache.spark.sql.SparkSession, dir: String)
       : (DataFrame, Seq[(Int, Int, String, String, Long)], Seq[(Long, Long)]) =
-    bpeIncrCache.getOrElseUpdate((spark, dir), {
+    bpeIncrCache((spark, dir)) {
       val wcnt = Tables(spark, dir).documents
         .select(explode(words(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("wc"))
@@ -698,13 +692,7 @@ object TextQueries {
         } else rounds += ((0L, vocabN))
       }
       (seqs, merges.result(), rounds.result())
-    })
-
-  /** Drop the memoized incremental-trainer state. */
-  private def clearBpeIncrCache(): Unit = {
-    bpeIncrCache.values.foreach(_._1.unpersist(blocking = false))
-    bpeIncrCache.clear()
-  }
+    }
 
   /** DuckDB CTE chain mirroring [[bpeBatchTrain]]: requires `w0(w)` (full
     * corpus word instances) and WITH RECURSIVE; defines

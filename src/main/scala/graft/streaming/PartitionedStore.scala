@@ -77,12 +77,16 @@ object PartitionedStore {
     * per leading value so plan size is O(distinct leading values), not
     * O(tuples): one level → `c IN (…)`; deeper →
     * `OR_v (c1 = v AND <recurse over v's tuples>)`. `asString` compares
-    * through a string cast (dir-name keys, the compaction path). */
-  private[streaming] def pruneExpr(partCols: Seq[String],
+    * through a string cast (dir-name keys, the compaction path). An
+    * empty tuple set prunes everything (ADVICE r11: a serve with no
+    * probes must return an empty result, not throw on the empty
+    * reduce). */
+  private[graft] def pruneExpr(partCols: Seq[String],
       touched: Seq[Seq[Any]], asString: Boolean = false): Column = {
     def c0 = if (asString) col(partCols.head).cast("string")
              else col(partCols.head)
-    if (partCols.size == 1) c0.isin(touched.map(_.head): _*)
+    if (touched.isEmpty) lit(false)
+    else if (partCols.size == 1) c0.isin(touched.map(_.head): _*)
     else touched.groupBy(_.head).toSeq.sortBy(_._1.toString).map {
       case (v, tuples) =>
         c0 === lit(v) && pruneExpr(partCols.tail, tuples.map(_.tail), asString)
@@ -112,12 +116,6 @@ object PartitionedStore {
         .join(delKeys.select(keyCols.map(col): _*), keyCols, "left_anti"),
       touched, crashAfterSwaps)
   }
-
-  /** Single-column form of [[deleteKeys]]. */
-  def deleteKeys(spark: SparkSession, path: String, partCol: String,
-      delKeys: DataFrame, keyCols: Seq[String],
-      crashAfterSwaps: Int = Int.MaxValue): Unit =
-    deleteKeys(spark, path, Seq(partCol), delKeys, keyCols, crashAfterSwaps)
 
   /** The staged-swap core: install `rows` as the AUTHORITATIVE new
     * content of exactly the `touched` partition tuples (rows outside
@@ -163,13 +161,6 @@ object PartitionedStore {
     }
     if (swapped >= touched.size) rmTree(st)
   }
-
-  /** Single-column form of [[replacePartitions]]. */
-  def replacePartitions(spark: SparkSession, path: String,
-      partCol: String, rows: DataFrame, touchedParts: Seq[Any],
-      crashAfterSwaps: Int = Int.MaxValue): Unit =
-    replacePartitions(spark, path, Seq(partCol), rows,
-      touchedParts.map(Seq(_)), crashAfterSwaps)
 
   /** Complete (or discard) an interrupted delete. With the commit
     * marker present every listed-but-still-staged partition dir is the
@@ -324,10 +315,6 @@ object PartitionedStore {
         .count(_.getName.endsWith(".parquet"))
     }.toMap
 
-  /** Single-column form of [[partFileCounts]]. */
-  def partFileCounts(path: String, partCol: String): Map[String, Int] =
-    partFileCounts(path, Seq(partCol)).map { case (vs, n) => vs.head -> n }
-
   /** Rewrite every partition holding more than `maxFiles` parquet files
     * down to one file each; returns the compacted partition values (as
     * dir-name strings, sorted). Reads and writes ONLY over-bound
@@ -353,9 +340,4 @@ object PartitionedStore {
       over, Int.MaxValue)
     over
   }
-
-  /** Single-column form of [[compact]]. */
-  def compact(spark: SparkSession, path: String, partCol: String,
-      maxFiles: Int = 1): Seq[String] =
-    compact(spark, path, Seq(partCol), maxFiles).map(_.head)
 }

@@ -128,10 +128,11 @@ object SnapshotStore {
     // ONE file per touched bucket per merge (file-count hygiene; the
     // extra exchange is delta-sized). compact() covers accumulation
     // from appends/imports outside the merge path.
-    PartitionedStore.replacePartitions(rows.sparkSession, path, "bucket",
+    PartitionedStore.replacePartitions(rows.sparkSession, path,
+      Seq("bucket"),
       rows.withColumn("bucket", bucketOf(keys.map(col), buckets))
         .repartition(col("bucket")),
-      touched, Int.MaxValue)
+      touched.map(Seq(_)), Int.MaxValue)
     recordBuckets(path, buckets)
   }
 
@@ -176,7 +177,7 @@ object SnapshotStore {
       delKeys: DataFrame, keys: Seq[String], crashAfterSwaps: Int): Unit = {
     if (!exists(path)) return
     val bc = bucketCount(path)
-    PartitionedStore.deleteKeys(spark, path, "bucket",
+    PartitionedStore.deleteKeys(spark, path, Seq("bucket"),
       delKeys.withColumn("bucket", bucketOf(keys.map(col), bc)),
       keys, crashAfterSwaps)
   }
@@ -202,8 +203,8 @@ object SnapshotStore {
 
   /** Per-bucket parquet file counts — the maintenance trigger signal. */
   def bucketFileCounts(path: String): Map[Int, Int] =
-    PartitionedStore.partFileCounts(path, "bucket")
-      .map { case (k, v) => k.toInt -> v }
+    PartitionedStore.partFileCounts(path, Seq("bucket"))
+      .map { case (k, v) => k.head.toInt -> v }
 
   /** Rewrite every bucket holding more than `maxFiles` parquet files
     * down to one file each; returns the compacted bucket ids. Reads and
@@ -211,5 +212,6 @@ object SnapshotStore {
     * overwrite); content is hash-identical by construction. */
   def compact(spark: SparkSession, path: String,
       maxFiles: Int = 1): Seq[Int] =
-    PartitionedStore.compact(spark, path, "bucket", maxFiles).map(_.toInt)
+    PartitionedStore.compact(spark, path, Seq("bucket"), maxFiles)
+      .map(_.head.toInt)
 }

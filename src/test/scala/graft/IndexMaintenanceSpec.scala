@@ -89,7 +89,8 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     val touched = delAsg.select("cent_id").distinct()
       .collect().map(_.get(0).toString).toSet
     assert(touched.nonEmpty)
-    PartitionedStore.deleteKeys(spark, cells, "cent_id", delAsg, Seq("vec_id"))
+    PartitionedStore.deleteKeys(spark, cells, Seq("cent_id"), delAsg,
+      Seq("vec_id"), Int.MaxValue)
     val after = fileState(cells)
     val unBefore = before.filter { case (p, _) =>
       !touched.exists(c => p.startsWith(s"cent_id=$c/")) }
@@ -119,7 +120,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
       spark.read.parquet(s"$root/centroids"))
     val nCells = delAsg.select("cent_id").distinct().count().toInt
     assert(nCells >= 2, s"fixture needs >= 2 touched cells, got $nCells")
-    PartitionedStore.deleteKeys(spark, cells, "cent_id", delAsg,
+    PartitionedStore.deleteKeys(spark, cells, Seq("cent_id"), delAsg,
       Seq("vec_id"), crashAfterSwaps = 1)
     assert(new java.io.File(s"$cells/_graft_staging_delete/_graft_touched").exists(),
       "committed staging missing after injected crash")
@@ -138,21 +139,22 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     import spark.implicits._
     val root = s"/tmp/graft-idxmaint-compact-${System.nanoTime()}"
     Q.buildBaseIvfIndex(spark, sfDir, root)
-    (0 until 3).foreach(w => Q.upsertIvfWave(spark, sfDir, root, w))
+    (0 until 3).foreach(w => Q.upsertIvfIncoming(spark, sfDir, root, Some(w)))
     val cells = s"$root/cells"
-    val counts0 = PartitionedStore.partFileCounts(cells, "cent_id")
+    val counts0 = PartitionedStore.partFileCounts(cells, Seq("cent_id"))
+      .map { case (k, n) => k.head -> n }
     assert(counts0.values.exists(_ > 1),
       s"3 waves accumulated no extra file generations: $counts0")
     val wantContent = spark.read.parquet(cells)
       .select("vec_id", "cent_id").as[(Long, Long)].collect().toSet
     val before = fileState(cells)
     val over = counts0.filter(_._2 > 1).keys.toSet
-    val compacted = PartitionedStore.compact(spark, cells, "cent_id",
-      maxFiles = 1)
+    val compacted = PartitionedStore.compact(spark, cells, Seq("cent_id"),
+      maxFiles = 1).map(_.head)
     assert(compacted.toSet == over,
       s"compacted $compacted, expected exactly the over-bound cells $over")
     // file bound holds everywhere afterwards
-    val counts1 = PartitionedStore.partFileCounts(cells, "cent_id")
+    val counts1 = PartitionedStore.partFileCounts(cells, Seq("cent_id"))
     assert(counts1.values.forall(_ <= 1),
       s"file bound violated after compact: $counts1")
     // under-bound cells byte-identical
@@ -166,7 +168,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
       .select("vec_id", "cent_id").as[(Long, Long)].collect().toSet
     assert(gotContent == wantContent, "compaction changed index content")
     // idempotent
-    assert(PartitionedStore.compact(spark, cells, "cent_id", 1).isEmpty)
+    assert(PartitionedStore.compact(spark, cells, Seq("cent_id"), 1).isEmpty)
     PartitionedStore.rmTreeForSpec(new java.io.File(root))
   }
 
@@ -299,7 +301,8 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     val want = content(rootA).toSet
     val before = fileState(s"$rootA/cells")
     // clean fold
-    val touched = Q.foldIngest(spark, rootA).map(_.toString).toSet
+    val touched = Q.foldIngest(spark, rootA, Q.RawTier)
+      .map(_.head.toString).toSet
     assert(touched.nonEmpty, "fold touched no cells — no streamed rows?")
     assert(!new java.io.File(s"$rootA/ingest").exists(),
       "ingest dirs survived a completed fold")
@@ -313,10 +316,10 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     assert(unBefore == unAfter, "fold rewrote a cell with no landed rows")
     // crash after ONE swap: staging committed, ingest still present;
     // a re-run must converge to the identical keyed content
-    Q.foldIngest(spark, rootB, crashAfterSwaps = 1)
+    Q.foldIngest(spark, rootB, Q.RawTier, crashAfterSwaps = 1)
     assert(new java.io.File(s"$rootB/cells/_graft_staging_delete").exists(),
       "crash injection left no staging")
-    Q.foldIngest(spark, rootB)
+    Q.foldIngest(spark, rootB, Q.RawTier)
     val gotB = content(rootB)
     assert(gotB.size == gotB.distinct.size,
       "crash-retry fold duplicated rows (keyed merge broken)")
@@ -483,13 +486,13 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
         }
     }
     val n0 = spark.read.parquet(s"$root/cells").count()
-    val pre = Q.planMaintenance(spark, root)
+    val pre = Q.planMaintenance(spark, root, Q.RawTier)
     info(s"corrupted: imbalance=${pre.imbalance} actions=${pre.actions.mkString(",")}")
     assert(pre.retrain,
       s"corruption did not trip the retrain dial: imbalance=${pre.imbalance}")
     assert(!pre.fold, "no ingest exists — fold must not trigger")
     Q.runMaintenance(spark, dir01, root, pre)
-    val post = Q.planMaintenance(spark, root)
+    val post = Q.planMaintenance(spark, root, Q.RawTier)
     info(s"repaired: imbalance=${post.imbalance}")
     assert(post.imbalance < pre.imbalance,
       s"retrain did not reduce imbalance: ${pre.imbalance} -> ${post.imbalance}")
@@ -520,7 +523,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     assert(before.nonEmpty)
     // maintenance crashes mid-fold: staging COMMITTED but only one swap
     // done, ingest dirs still present — the worst read-side moment
-    Q.foldIngest(spark, root, crashAfterSwaps = 1)
+    Q.foldIngest(spark, root, Q.RawTier, crashAfterSwaps = 1)
     assert(new java.io.File(
       s"$root/cells/_graft_staging_delete/_graft_touched").exists(),
       "crash injection left no committed staging")
@@ -530,7 +533,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     assert(!new java.io.File(s"$root/cells/_graft_staging_delete").exists(),
       "read path did not complete the committed staging")
     // the fold retry converges; the post-fold serve is still identical
-    Q.foldIngest(spark, root)
+    Q.foldIngest(spark, root, Q.RawTier)
     assert(!new java.io.File(s"$root/ingest").exists())
     assert(serveAll() == before, "post-fold serve diverged")
     PartitionedStore.rmTreeForSpec(new java.io.File(root))
@@ -588,16 +591,15 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     // the planner OBSERVES the codes tier: pending generations trigger
     // the fold; the retrain dial is structurally off (re-clustering
     // would invalidate every stored code)
-    val pre = Q.planCodesMaintenance(spark, root)
+    val pre = Q.planMaintenance(spark, root, Q.CodesTier)
     info(s"pre=$pre -> actions=${pre.actions.mkString(",")}")
     assert(pre.pendingGens >= 2 && pre.fold,
       s"scenario lost its pending code generations: $pre")
     assert(!pre.retrain && pre.imbalance == 0.0,
       s"codes tier must never trip the retrain dial: $pre")
     val before = fileState(s"$root/codes")
-    val touched = Q.foldIngest(spark, root,
-        cellsSub = "codes", ingestSub = "codes_ingest")
-      .map(_.toString).toSet
+    val touched = Q.foldIngest(spark, root, Q.CodesTier)
+      .map(_.head.toString).toSet
     assert(touched.nonEmpty, "fold touched no code cells")
     assert(!new java.io.File(s"$root/codes_ingest").exists(),
       "codes_ingest dirs survived a completed fold")
@@ -612,10 +614,10 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
       "codes fold lost, invented, or duplicated code rows")
     // planner convergence: fold satisfied; any residual file-bound wear
     // is compact's job, after which all signals read healthy
-    val mid = Q.planCodesMaintenance(spark, root)
+    val mid = Q.planMaintenance(spark, root, Q.CodesTier)
     assert(!mid.fold, s"fold signal survived the fold: $mid")
-    Q.runCodesMaintenance(spark, root, mid)
-    val post = Q.planCodesMaintenance(spark, root)
+    Q.runMaintenance(spark, sfDir, root, mid)
+    val post = Q.planMaintenance(spark, root, Q.CodesTier)
     assert(post.actions.isEmpty, s"codes planner did not converge: $post")
     // gate level: the folded serve is row-identical to the union serve
     val a = SparkEntry.queries("q_stream_index_pq_fold")(spark, sfDir)
@@ -629,12 +631,12 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
 
   test("planner on empty/missing layouts: all signals read healthy instead of throwing") {
     val ghost = s"/tmp/graft-idxmaint-ghost-${System.nanoTime()}"
-    val plan = Q.planMaintenance(spark, ghost)
+    val plan = Q.planMaintenance(spark, ghost, Q.RawTier)
     assert(plan.actions.isEmpty && plan.imbalance == 0.0,
       s"missing layout must plan 'nothing': $plan")
     // fully-deleted cells layout: dirs exist, zero parquet files
     new java.io.File(s"$ghost/cells/cent_id=0").mkdirs()
-    val plan2 = Q.planMaintenance(spark, ghost)
+    val plan2 = Q.planMaintenance(spark, ghost, Q.RawTier)
     assert(plan2.actions.isEmpty && plan2.imbalance == 0.0,
       s"emptied layout must plan 'nothing': $plan2")
     PartitionedStore.rmTreeForSpec(new java.io.File(ghost))
@@ -715,7 +717,8 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
       (1L, 10L), (1L, 11L), (1L, 12L),
       (2L, 10L), (2L, 13L),
       (3L, 14L), (3L, 15L))
-    val prune = Q.labelBatchedPrune(pairs)
+    val prune = PartitionedStore.pruneExpr(Seq("label", "cent_id"),
+      pairs.map { case (l, c) => Seq(l, c) })
     // Column.toString renders the full predicate function-style with
     // no explain-style truncation — e.g. or(or(and(=(label, 1),
     // in(cent_id, 10, 11, 12)), …)): 3 labels -> exactly 2 or() nodes
@@ -740,7 +743,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     // decisions: pending generations -> fold; disjoint split leaves ->
     // compact; imbalance is observability only (no retrain action on
     // the filtered tier — centroids are shared across labels)
-    val pre = Q.planFilteredMaintenance(spark, root)
+    val pre = Q.planMaintenance(spark, root, Q.FilteredTier)
     info(s"pre=$pre -> actions=${pre.actions.mkString(",")}")
     assert(pre.pendingGens == 2 && pre.fold,
       s"scenario lost its pending generations: $pre")
@@ -753,18 +756,19 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
       .select("vec_id").distinct().count()
     // fold with an injected crash after ONE swap: committed staging,
     // ingest still present — the retry completes and converges
-    val touched1 = Q.foldFilteredIngest(spark, root, crashAfterSwaps = 1)
+    val touched1 = Q.foldIngest(spark, root, Q.FilteredTier,
+      crashAfterSwaps = 1)
     assert(touched1.nonEmpty, "crashed fold reported no touched leaves")
     assert(new java.io.File(s"$root/ingest").exists(),
       "crashed fold must leave the landed generations in place")
     val before = fileState(s"$root/cells")
-    val touched = Q.foldFilteredIngest(spark, root)
+    val touched = Q.foldIngest(spark, root, Q.FilteredTier)
     assert(touched.nonEmpty, "fold retry touched no leaves")
     assert(!new java.io.File(s"$root/ingest").exists(),
       "ingest dirs survived a completed fold")
     // untouched-leaf byte identity across the RETRY (leaves outside the
     // touched pair set keep their files byte-identical)
-    val touchedRels = touched.map { case (l, c) => s"label=$l/cent_id=$c/" }
+    val touchedRels = touched.map { case Seq(l, c) => s"label=$l/cent_id=$c/" }
     // the crashed fold's committed staging is transient swap state, not
     // leaf content — exclude it from the identity comparison
     val unBefore = before.filter { case (p, _) =>
@@ -782,10 +786,10 @@ class IndexMaintenanceSpec extends AnyFunSuite with TestSession {
     assert(cells.select("vec_id").distinct().count() == want,
       "fold lost or invented rows")
     // compact repairs the file bound; planner converges to nothing
-    val mid = Q.planFilteredMaintenance(spark, root)
+    val mid = Q.planMaintenance(spark, root, Q.FilteredTier)
     assert(!mid.fold, s"fold signal survived the fold: $mid")
-    Q.runFilteredMaintenance(spark, root, mid)
-    val post = Q.planFilteredMaintenance(spark, root)
+    Q.runMaintenance(spark, sfDir, root, mid)
+    val post = Q.planMaintenance(spark, root, Q.FilteredTier)
     assert(post.actions.isEmpty, s"filtered planner did not converge: $post")
     assert(post.maxImbalance > 0.0 && post.maxImbalance < Q.PLANNER_IMBALANCE_MAX,
       s"per-label imbalance should read healthy on real data: $post")

@@ -630,7 +630,7 @@ class RecallSpec extends AnyFunSuite with TestSession {
         .map(f => f.getPath -> f.length()).toMap
     }
     val before = state()
-    Q.upsertIvfIncoming(spark, sfDir, root)
+    Q.upsertIvfIncoming(spark, sfDir, root, None)
     val after = state()
     // incoming cells = frozen-centroid assignment of the %10==9 slice
     val touched = spark.read.parquet(s"$root/cells")

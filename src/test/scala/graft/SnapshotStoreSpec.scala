@@ -327,7 +327,7 @@ class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // committed
     val delKeys = spark.range(16).filter(col("id") % 2 === 0)
       .select(col("id").as("k"), (col("id") % 4).as("p"))
-    PartitionedStore.deleteKeys(spark, lay, "p", delKeys, Seq("k"),
+    PartitionedStore.deleteKeys(spark, lay, Seq("p"), delKeys, Seq("k"),
       crashAfterSwaps = 1)
     val marker = new java.io.File(s"$lay/_graft_staging_delete/_graft_touched")
     assert(marker.exists(), "fixture: no committed staging")
