@@ -2,10 +2,52 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Writes PLANS.md: formatted physical plans of the headline queries at
-  * sf0.001, for plan review without running anything. */
+/** Plan review without running anything.
+  *
+  * With no arguments: writes PLANS.md, the formatted physical plans of
+  * the headline queries at sf0.001.
+  *
+  * `runMain graft.PlanDump <outDir> <suffix> [q_a,q_b,...]`: writes
+  * `<outDir>/<name>_<suffix>.txt` with the `.explain("formatted")`
+  * output of the named queries (default: every declared query) at
+  * `SPARK_GRAFT_SF_DIR` (default sf0.1 — the bench's scale, so
+  * size-driven strategy choices match the measured numbers) — the
+  * optimization rounds' before/after plan evidence. Streaming/iterative
+  * gates whose run() executes jobs eagerly still produce their final
+  * frame's plan (the serve/read side). */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    if (args.isEmpty) headline() else evidence(args(0), args(1), args.drop(2))
+
+  private def evidence(outDir: String, suffix: String,
+      only: Array[String]): Unit = {
+    val names =
+      if (only.nonEmpty) only(0).split(",").toSeq
+      else SparkEntry.queries.keys.toSeq.sorted
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val spark = Engine.ready(Engine.configure(
+      SparkSession.builder().master(s"local[$cpus]").appName("plan-dump"),
+      cpus).getOrCreate())
+    spark.sparkContext.setLogLevel("ERROR")
+    val out = Paths.get(outDir)
+    Files.createDirectories(out)
+    names.foreach { name =>
+      try {
+        val plan = SparkEntry.queries(name)(spark, dir)
+          .queryExecution.explainString(
+            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        Files.writeString(out.resolve(s"${name}_$suffix.txt"), plan)
+        System.err.println(s"[plans] $name")
+      } catch { case e: Throwable =>
+        System.err.println(s"[plans] $name FAILED: ${Verify.brief(e)}")
+      } finally graft.queries.Scratch.release(spark)
+    }
+    spark.stop()
+  }
+
+  private def headline(): Unit = {
     val spark = Engine.ready(Engine.configure(
       SparkSession.builder().master("local[4]").appName("plan-dump"), 4)
       .getOrCreate())
