@@ -389,6 +389,11 @@ object Bench {
       .map { case (n, p) => "\"" + n + s"""":$p""" }.mkString("{", ",", "}")
     val over2x = ratios.collect { case (n, p) if p > 2000 => n }
     val over2xJson = over2x.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // the tail lines carry the count and the first 4 names only: at 4
+    // cores 110 names overflowed the driver's 2000-char tail capture;
+    // the full list lives in the full record and bench_report.json
+    val over2xInline = s""""over2x_n":${over2x.size},"over2x":""" +
+      over2x.take(4).map("\"" + _ + "\"").mkString("[", ",", "]")
     val ratioMax = if (ratios.isEmpty) 0L else ratios.map(_._2).max
     val failN = failCounts.values.sum
     val failedGatesJson = failCounts.keys.toSeq.sorted
@@ -441,11 +446,11 @@ object Bench {
     // results is already in sorted-name order (names.sorted above)
     val msArray = results.map { case (_, v, _, _) => math.round(v * 1000) }
       .mkString("[", ",", "]")
-    val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec","partial":$sweepPartial,"n_queries":${results.length},"reps_default":${repsEnv.getOrElse(2)},"reps_policy":"2-lower-score","gc_ms_total":$gcTotal,"loadavg_start":$loadStart%.2f,"loadavg_timed":$loadTimed%.2f,"loadavg_end":$loadEnd%.2f,"quiet_wait_sec":${quietWaited + requietWaited},"fail_n":$failN,"failed_gates":$failedGatesJson,"drift_skip":$driftSkip,"requeried_n":${remeasured.size},"requeried":$requeriedInline,"ratio_n":${ratios.size},"ratio_max_milli":$ratioMax,"over2x":$over2xJson,"queries":$slowest,"query_ms":$msArray,"sf":"$sfDir"}"""
+    val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec","partial":$sweepPartial,"n_queries":${results.length},"reps_default":${repsEnv.getOrElse(2)},"reps_policy":"2-lower-score","gc_ms_total":$gcTotal,"loadavg_start":$loadStart%.2f,"loadavg_timed":$loadTimed%.2f,"loadavg_end":$loadEnd%.2f,"quiet_wait_sec":${quietWaited + requietWaited},"fail_n":$failN,"failed_gates":$failedGatesJson,"drift_skip":$driftSkip,"requeried_n":${remeasured.size},"requeried":$requeriedInline,"ratio_n":${ratios.size},"ratio_max_milli":$ratioMax,$over2xInline,"queries":$slowest,"query_ms":$msArray,"sf":"$sfDir"}"""
     // fallback: if the summary ever outgrows the tail budget (gate
     // count growth), a minimal line WITHOUT the per-query array goes
     // last so the tail still ends in parseable JSON
-    val minimal = f"""{"metric":"total","value":$total%.3f,"unit":"sec","partial":$sweepPartial,"n_queries":${results.length},"fail_n":$failN,"drift_skip":$driftSkip,"ratio_max_milli":$ratioMax,"over2x":$over2xJson,"sf":"$sfDir"}"""
+    val minimal = f"""{"metric":"total","value":$total%.3f,"unit":"sec","partial":$sweepPartial,"n_queries":${results.length},"fail_n":$failN,"drift_skip":$driftSkip,"ratio_max_milli":$ratioMax,$over2xInline,"sf":"$sfDir"}"""
     // The compact summary is emitted AFTER spark.stop() as the absolute
     // last stdout act (r11 judge item #1): the r11 driver artifact lost
     // its summary line to an ASYNC state-store maintenance stack trace
@@ -454,15 +459,19 @@ object Bench {
     // can write to the tail after this line. (The trace's root cause —
     // checkpoint-file checksum sidecar races — is also disabled at the
     // session level; see Engine.configure.)
+    // The ratio-gate banner goes BEFORE it, so the tail still ends in
+    // the summary when the gate fires widely.
     spark.stop()
-    println(summary)
-    if (summary.length > 1900) println(minimal)
-    System.out.flush()
     if (over2x.nonEmpty) {
       System.err.println(s"[bench] RATIO GATE FAILED: ${over2x.size} " +
         s"certified queries exceed 2x their baseline.json reference: " +
         over2x.mkString(", "))
-      if (sys.env.get("SPARK_GRAFT_RATIO_GATE").contains("fail")) sys.exit(1)
+      System.err.flush()
     }
+    println(summary)
+    if (summary.length > 1900) println(minimal)
+    System.out.flush()
+    if (over2x.nonEmpty && sys.env.get("SPARK_GRAFT_RATIO_GATE").contains("fail"))
+      sys.exit(1)
   }
 }
