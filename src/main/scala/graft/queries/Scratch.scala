@@ -57,11 +57,11 @@ object Scratch {
     * calls can never attribute each other's RDD. Eager mode registers
     * lazily INSIDE the lock (no job) and materializes OUTSIDE it, so
     * concurrent eager checkpoints still overlap their compute. A
-    * concurrent non-Scratch persist (the five long-lived memo caches)
-    * could in principle land inside the microseconds-wide diff window
-    * of another thread; those caches are created once under their own
-    * memoization locks before any overlapped serve runs, so the window
-    * is not reachable in practice. */
+    * concurrent non-Scratch persist (a long-lived [[Memo]] frame) could
+    * in principle land inside the microseconds-wide diff window of
+    * another thread; those frames are built once per key under Memo's
+    * holder before any overlapped serve runs, so the window is not
+    * reachable in practice. */
   private def track(df: DataFrame, eager: Boolean): DataFrame = {
     val sc = df.sparkSession.sparkContext
     val out = synchronized {

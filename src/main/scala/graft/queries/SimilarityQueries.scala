@@ -1502,8 +1502,7 @@ object SimilarityQueries {
     * completion under the tiny-state streaming regime: the rows are
     * staged as 4 files read 2 per trigger, so `land` sees two batches.
     * `name` (a [[graft.streaming.Streams.fresh]] name) keys the staged
-    * source and the checkpoint. Every index ingest and streaming serve
-    * here runs through this. */
+    * source and the checkpoint. */
   private def streamBatches(spark: SparkSession, name: String,
       rows: DataFrame)(land: (DataFrame, Long) => Unit): Unit = {
     import graft.streaming.Streams
@@ -2323,8 +2322,6 @@ object SimilarityQueries {
   // the fold converges instead of duplicating — the same idempotence
   // argument as SnapshotStore's LWW merge.
 
-  private val foldCache = Memo[Key, String]()
-
   /** One partitioned index tier under a root: its live `table` and its
     * landing `ingest` subdirectory (one `bid=` generation per
     * micro-batch, partitioned like the table), and the partition `keys`
@@ -2392,6 +2389,8 @@ object SimilarityQueries {
     PartitionedStore.removeTree(ingestDir)
     touched
   }
+
+  private val foldCache = Memo[Key, String]()
 
   /** Memoized copy of the streamed index + fold; returns the root. */
   private[graft] def foldedIvfIndex(spark: SparkSession,

@@ -184,10 +184,13 @@ object TextQueries {
     * loop. */
   private[graft] val BPE_ROUNDS = 64
 
+  /** The key of the BPE trainer memos: (session, source dir). */
+  private type Key = (org.apache.spark.sql.SparkSession, String)
+
   /** Memoized multi-level training result per (session, dir):
     * (vocab frame (w, wc, toks) after N rounds — localCheckpoint-backed,
     * tiny; merge list (round, x, y, cnt) — driver-side metadata). */
-  private val bpeMultiCache = Memo.withRelease[(org.apache.spark.sql.SparkSession, String),
+  private val bpeMultiCache = Memo.withRelease[Key,
       (DataFrame, Seq[(Int, String, String, Long)])](
       _._1.unpersist(blocking = false))
 
@@ -411,7 +414,7 @@ object TextQueries {
 
   /** Memoized train-split (doc_id % 4 <> 0) trainer state, keyed like
     * [[bpeMultiCache]]. */
-  private val bpeSplitCache = Memo.withRelease[(org.apache.spark.sql.SparkSession, String),
+  private val bpeSplitCache = Memo.withRelease[Key,
       (DataFrame, Seq[(Int, String, String, Long)])](
       _._1.unpersist(blocking = false))
 
@@ -511,7 +514,7 @@ object TextQueries {
 
   /** Memoized batched-trainer state: (final vocab frame (w, wc, toks),
     * accepted merges (super_round, sel_rank, x, y, cnt)). */
-  private val bpeBatchCache = Memo.withRelease[(org.apache.spark.sql.SparkSession, String),
+  private val bpeBatchCache = Memo.withRelease[Key,
       (DataFrame, Seq[(Int, Int, String, String, Long)])](
       _._1.unpersist(blocking = false))
 
@@ -629,7 +632,7 @@ object TextQueries {
   /** Memoized incremental-trainer state: (final vocab frame, accepted
     * merges (super_round, sel_rank, x, y, cnt), per-round
     * (affected words, vocabulary size)). */
-  private val bpeIncrCache = Memo.withRelease[(org.apache.spark.sql.SparkSession, String),
+  private val bpeIncrCache = Memo.withRelease[Key,
       (DataFrame, Seq[(Int, Int, String, String, Long)], Seq[(Long, Long)])](
       _._1.unpersist(blocking = false))
 
