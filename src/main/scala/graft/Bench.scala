@@ -390,7 +390,7 @@ object Bench {
     val over2x = ratios.collect { case (n, p) if p > 2000 => n }
     val over2xJson = over2x.map("\"" + _ + "\"").mkString("[", ",", "]")
     // the tail lines carry the count and the first 4 names only: at 4
-    // cores 110 names overflowed the driver's 2000-char tail capture;
+    // cores 110 names overflowed a 2000-char tail capture;
     // the full list lives in the full record and bench_report.json
     val over2xInline = s""""over2x_n":${over2x.size},"over2x":""" +
       over2x.take(4).map("\"" + _ + "\"").mkString("[", ",", "]")

@@ -7,12 +7,12 @@ import java.nio.file.{Files, Paths}
   * With no arguments: writes PLANS.md, the formatted physical plans of
   * the headline queries at sf0.001.
   *
-  * `runMain graft.PlanDump <outDir> <suffix> [q_a,q_b,...]`: writes
-  * `<outDir>/<name>_<suffix>.txt` with the `.explain("formatted")`
-  * output of the named queries (default: every declared query) at
-  * `SPARK_GRAFT_SF_DIR` (default sf0.1 — the bench's scale, so
-  * size-driven strategy choices match the measured numbers) — the
-  * optimization rounds' before/after plan evidence. Streaming/iterative
+  * `SPARK_GRAFT_SF_DIR=<sf dir> runMain graft.PlanDump <outDir> <suffix>
+  * [q_a,q_b,...]`: writes `<outDir>/<name>_<suffix>.txt` with the
+  * `.explain("formatted")` output of the named queries (default: every
+  * declared query) — the optimization rounds' before/after plan
+  * evidence; point it at the bench's sf0.1 dir so size-driven strategy
+  * choices match the measured numbers. Streaming/iterative
   * gates whose run() executes jobs eagerly still produce their final
   * frame's plan (the serve/read side). */
 object PlanDump {
@@ -24,7 +24,8 @@ object PlanDump {
     val names =
       if (only.nonEmpty) only(0).split(",").toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      sys.error("set SPARK_GRAFT_SF_DIR to the sf dir to plan against"))
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
     val spark = Engine.ready(Engine.configure(

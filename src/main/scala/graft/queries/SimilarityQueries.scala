@@ -194,8 +194,8 @@ object SimilarityQueries {
 
   /** The slice's first ceil(√n) vectors as centroids (cent_id, cemb,
     * cnorm2) — the seed discipline of every √n-cell layout, with n
-    * derived via the broadcast-scalar idiom (the count never rides the
-    * driver). */
+    * derived via the broadcast-scalar idiom (the count is never
+    * collected). */
   private def sqrtCentroids(slice: DataFrame): DataFrame = {
     val nn = slice.agg(count(lit(1)).as("n"))
     slice.crossJoin(broadcast(nn))
@@ -1808,8 +1808,8 @@ object SimilarityQueries {
   /** Wipe `root` and fill it with a copy of the layout at `src` — how
     * every scenario that mutates a shared layout starts, so sibling
     * gates keep serving the original. The wipe is also the
-    * pid-recycling guard (ADVICE r10): a crashed prior run under a
-    * recycled pid could leave stale generations under `root`. */
+    * pid-recycling guard: a crashed prior run under a recycled pid
+    * could leave stale generations under `root`. */
   private def copyLayout(src: String, root: String): Unit = {
     import graft.streaming.PartitionedStore
     PartitionedStore.removeTree(new java.io.File(root))
@@ -2827,7 +2827,7 @@ object SimilarityQueries {
       dir: String): (String, ServeMaintTrace) = {
     val root = indexRoot("ivfservemaint", dir)
     val out = indexRoot("ivfservemaintout", dir)
-    // the destructive build runs once per key (Memo, ADVICE r12); every
+    // the destructive build runs once per key (Memo); every
     // other invocation — including one that waited on a concurrent
     // build — re-runs the serve stream against the folded layout
     var built = false

@@ -78,9 +78,8 @@ object PartitionedStore {
     * O(tuples): one level → `c IN (…)`; deeper →
     * `OR_v (c1 = v AND <recurse over v's tuples>)`. `asString` compares
     * through a string cast (dir-name keys, the compaction path). An
-    * empty tuple set prunes everything (ADVICE r11: a serve with no
-    * probes must return an empty result, not throw on the empty
-    * reduce). */
+    * empty tuple set prunes everything: a serve with no probes must
+    * return an empty result, not throw on the empty reduce. */
   private[graft] def pruneExpr(partCols: Seq[String],
       touched: Seq[Seq[Any]], asString: Boolean = false): Column = {
     def c0 = if (asString) col(partCols.head).cast("string")
